@@ -27,8 +27,9 @@ bit-for-bit, same reason as scale_up.py):
 Correctness on this tier is checked by the same 87-gate DuckDB oracle
 (check_local.py) — the oracle recomputes on the skewed data, so "green on
 sf1skew" means every operator's semantics survive adversarial key
-distributions, and the bench A/B (tools/SkewAB) measures what AQE's
-runtime skew split buys on the join stragglers.
+distributions, and the bench A/B recorded in SCALE_STRESS.md ("Skew
+stress") measures what AQE's runtime skew split buys on the join
+stragglers.
 
 Usage: skew_up.py [src_dir] [dst_dir]
 """

@@ -157,6 +157,71 @@ object Bench {
       None
     }
 
+  private def fmt(v: Double): String = String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
+  private def fmt2(v: Double): String = String.format(java.util.Locale.ROOT, "%.2f", Double.box(v))
+
+  /** `{"metric":"total",...}` over the per-query seconds `rs`; `tail` is
+    * spliced in after the query map.
+    */
+  private def render(total: Double, rs: Seq[(String, Double)], tail: String): String = {
+    val qs = rs.map { case (k, v) => "\"" + k + "\":" + fmt(v) }.mkString("{", ",", "}")
+    s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs$tail}"""
+  }
+
+  private[graft] val Budget = 1800 // 2000-char tail minus the sbt epilogue, with margin
+
+  /** The stdout line, at most [[Budget]] chars, from per-query seconds
+    * (`-1` = failed), summed task-seconds per query, the count of failed
+    * timed runs, and `suffix` (baseline fields and the sf dir).
+    *
+    * The line is parsed from the last 2000 chars of stdout, and sbt's
+    * "[success] Total time" epilogue lands after it inside that window.
+    * The full per-query map is over 2 KB, so no formatting trick fits
+    * it: the full map goes to BENCH_LOCAL.json (the durable copy), and
+    * this line is headline total + as many of the SLOWEST per-query
+    * entries as the budget allows, the rest folded into an "omitted"
+    * summary (count + summed seconds), so the parsed line is
+    * self-consistent: value == sum(queries) + omitted.sum.
+    */
+  private[graft] def printedLine(results: Seq[(String, Double)], taskSec: Map[String, Double],
+                                 timedFails: Int, suffix: String): String = {
+    val total = results.collect { case (_, v) if v >= 0 => v }.sum
+    val fullLine = render(total, results, suffix)
+    // Deterministic per-query task-seconds for the slowest rows ride the
+    // printed line: wall clock on a shared host swings with external
+    // load, while summed task time is plan-invariant — a diff can then
+    // separate plan changes from host drift without the full BENCH_LOCAL
+    // record. Top 20 by wall, 2-decimal, ~600 chars of the tail budget.
+    val taskSecJson = {
+      val top = results.filter(_._2 >= 0).sortBy(-_._2).take(20)
+        .flatMap { case (n, _) => taskSec.get(n).map(t => "\"" + n + "\":" + fmt2(t)) }
+      if (top.isEmpty) "" else s""","task_sec":${top.mkString("{", ",", "}")}"""
+    }
+    if (fullLine.length + taskSecJson.length <= Budget)
+      render(total, results, taskSecJson + suffix)
+    else if (fullLine.length <= Budget) fullLine
+    else {
+      // failures (sentinel -1) sort LAST, not as if they took 1 second:
+      // they must be the first entries omitted so kept values are real
+      // times and the invariant value == sum(queries) + omitted.sum holds
+      val bySlowest = results.sortBy { case (_, v) => if (v < 0) Double.MaxValue else -v }
+      // failed queries carry the -1 sentinel: keep them out of the
+      // omitted-seconds sum (value == sum(queries) + omitted.sum must
+      // hold) and surface them as an explicit count instead
+      def shrunk(keep: Int, ts: String): String = {
+        val omitted = bySlowest.drop(keep)
+        val omittedSecs = omitted.collect { case (_, v) if v >= 0 => v }.sum
+        val extra = s""","omitted":{"n":${omitted.length},"sum":${fmt(omittedSecs)},"failed":$timedFails,"full":"BENCH_LOCAL.json"}$ts"""
+        render(total, bySlowest.take(keep), extra + suffix)
+      }
+      // largest prefix of slowest-first entries whose rendered line fits;
+      // when even an empty query map does not fit, task_sec goes too
+      (bySlowest.length - 1 to 0 by -1).iterator.map(shrunk(_, taskSecJson))
+        .find(_.length <= Budget)
+        .getOrElse(shrunk(0, ""))
+    }
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -328,17 +393,7 @@ object Bench {
       }
     if (timedFails > 0)
       System.err.println(s"[bench] timed pass: $timedFails queries failed")
-    // The driver keeps only the LAST 2000 chars of stdout (measured across
-    // rounds 1-4: every tail is exactly 2000), and sbt's "[success] Total
-    // time" epilogue lands after this line inside that window. At 84
-    // queries the full per-query map is ~2.3 KB, so no formatting trick
-    // fits it — every round so far recorded parsed:null. Emit the full map
-    // to BENCH_LOCAL.json (committed, the durable copy) and print a final
-    // line guaranteed to fit: headline total + as many of the SLOWEST
-    // per-query entries as the budget allows, the rest folded into an
-    // "omitted" summary (count + summed seconds), so the parsed line is
-    // self-consistent: value == sum(queries) + omitted.sum.
-    def fmt(v: Double): String = String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
+    // the full map goes to BENCH_LOCAL.json; stdout gets printedLine
     val total = results.collect { case (_, v) if v >= 0 => v }.sum
     // same-window baseline (see duckBaseline): runs AFTER the engine's
     // timed passes — with the Spark context STOPPED first, so the
@@ -368,11 +423,8 @@ object Bench {
           s""","engine_total":${fmt(total)},"duck_total":${fmt(dt)},"duck_warmed":true,"ratio":${fmt(total / dt)}"""
         case _ => ""","engine_total":null,"duck_total":null,"ratio":null"""
       }
-    def render(rs: Seq[(String, Double)], extra: String): String = {
-      val qs = rs.map { case (k, v) => "\"" + k + "\":" + fmt(v) }.mkString("{", ",", "}")
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs$extra$duckExtra,"sf":"$sfDir"}"""
-    }
-    val fullLine = render(results, "")
+    val suffix = s"""$duckExtra,"sf":"$sfDir""""
+    val fullLine = render(total, results, suffix)
     val metricsJson = planMetrics.map { case (k, (j, tk, ts)) =>
       "\"" + k + "\":{\"jobs\":" + j + ",\"tasks\":" + tk + ",\"task_sec\":" + fmt(ts) + "}"
     }.mkString(",\"plan_metrics\":{", ",", "}")
@@ -382,44 +434,8 @@ object Bench {
     val fullRecord = fullLine.patch(fullLine.lastIndexOf("}"), metricsJson + duckJson + "}", 1)
     try java.nio.file.Files.writeString(java.nio.file.Paths.get("BENCH_LOCAL.json"), fullRecord + "\n")
     catch { case _: Throwable => () }
-    val Budget = 1800 // 2000-char tail minus the sbt epilogue, with margin
-    // Deterministic per-query task-seconds for the slowest rows ride the
-    // printed line (r17 verdict task 5, additions-only): wall clock on a
-    // shared host swings with external load, while summed task time is
-    // plan-invariant — a PERF diff can then separate plan changes from
-    // host drift without the full BENCH_LOCAL record. Top 20 by wall,
-    // 2-decimal, ~600 chars of the tail budget; the full per-query map
-    // stays in BENCH_LOCAL.json.
-    def fmt2(v: Double): String = String.format(java.util.Locale.ROOT, "%.2f", Double.box(v))
-    val taskSecJson = {
-      val top = results.filter(_._2 >= 0).sortBy(-_._2).take(20)
-        .flatMap { case (n, _) =>
-          planMetrics.get(n).map(m => "\"" + n + "\":" + fmt2(m._3)) }
-      if (top.isEmpty) "" else s""","task_sec":${top.mkString("{", ",", "}")}"""
-    }
-    val line =
-      if (fullLine.length + taskSecJson.length <= Budget)
-        render(results, taskSecJson)
-      else {
-        // failures (sentinel -1) sort LAST, not as if they took 1 second:
-        // they must be the first entries omitted so kept values are real
-        // times and the invariant value == sum(queries) + omitted.sum holds
-        val bySlowest = results.sortBy { case (_, v) => if (v < 0) Double.MaxValue else -v }
-        // largest prefix of slowest-first entries whose rendered line fits
-        var keep = bySlowest.length
-        var out = fullLine
-        while (keep > 0 && out.length > Budget) {
-          keep -= 1
-          val omitted = bySlowest.drop(keep)
-          // failed queries carry the -1 sentinel: keep them out of the
-          // omitted-seconds sum (value == sum(queries) + omitted.sum must
-          // hold) and surface them as an explicit count instead
-          val omittedSecs = omitted.collect { case (_, v) if v >= 0 => v }.sum
-          val extra = s""","omitted":{"n":${omitted.length},"sum":${fmt(omittedSecs)},"failed":$timedFails,"full":"BENCH_LOCAL.json"}$taskSecJson"""
-          out = render(bySlowest.take(keep), extra)
-        }
-        out
-      }
+    val line = printedLine(results, planMetrics.map { case (k, m) => k -> m._3 }.toMap,
+      timedFails, suffix)
     println(line)
     System.out.flush()
     spark.stop()

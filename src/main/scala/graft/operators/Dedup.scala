@@ -1278,14 +1278,22 @@ object Dedup {
     * scale story is unchanged (and unconditionally exercised by the
     * round-count specs, which call [[minLabelCc]]/[[starCc]] directly).
     *
-    * Guarded on BOTH sides: only a persisted input qualifies (the count
-    * must read cached rows, never recompute an unbounded pair
+    * Guarded on all sides: only integral ids qualify (the union-find
+    * keys on longs; any other id type is labelled by the distributed
+    * loops, which compare ids in their own type), only a persisted input
+    * (the count must read cached rows, never recompute an unbounded pair
     * generation twice), and only below the edge cutoff. Anything else
     * falls through to the distributed loops untouched.
     */
   private[graft] def smallGraphLabels(pairs: DataFrame,
                                       maxEdges: Long = DriverCcMaxEdges): Option[DataFrame] = {
-    if (pairs.storageLevel == org.apache.spark.storage.StorageLevel.NONE) None
+    import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
+    def integral(c: String) = pairs.schema(c).dataType match {
+      case ByteType | ShortType | IntegerType | LongType => true
+      case _ => false
+    }
+    if (!integral("doc_a") || !integral("doc_b")) None
+    else if (pairs.storageLevel == org.apache.spark.storage.StorageLevel.NONE) None
     else if (pairs.count() > maxEdges) None
     else {
       val spark = pairs.sparkSession
@@ -1294,7 +1302,8 @@ object Dedup {
       // ids are dropped BEFORE the collect (getLong on a null id NPE'd
       // the driver where the distributed loops would not crash; upstream
       // pair generation never emits them, so this is tolerance, not a
-      // semantic change).
+      // semantic change). The ids are integral here, so the widening cast
+      // never turns a value into a null: only true null ids are dropped.
       val tupleEnc = org.apache.spark.sql.Encoders.tuple(
         org.apache.spark.sql.Encoders.scalaLong,
         org.apache.spark.sql.Encoders.scalaLong)

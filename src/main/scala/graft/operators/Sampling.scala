@@ -198,7 +198,17 @@ object Sampling {
   def importanceResample(raw: DataFrame, target: DataFrame,
                          textCol: String, idCol: String,
                          buckets: Int = 1024,
-                         keepFraction: Double = 0.25): DataFrame = {
+                         keepFraction: Double = 0.25): DataFrame =
+    importanceResample(raw, target, textCol, idCol, buckets, keepFraction,
+      HistBinCollectMax)
+
+  /** [[importanceResample]] with an explicit threshold-bin collect bound
+    * (specs pass 0 to force the exact-rank fallback).
+    */
+  private[graft] def importanceResample(raw: DataFrame, target: DataFrame,
+                                        textCol: String, idCol: String,
+                                        buckets: Int, keepFraction: Double,
+                                        histBinCollectMax: Long): DataFrame = {
     require(buckets > 0 && keepFraction > 0 && keepFraction <= 1)
     val spark = raw.sparkSession
     import spark.implicits._
@@ -263,7 +273,7 @@ object Sampling {
     //      the cached arrays. No exchange, no sort, no second
     //      corpus-sized cache (the old `keyed` cache held every scored
     //      row a second time — real memory at the 100x tier, guide §5).
-    // A threshold bin past [[histBinCollectMax]] (degenerate tie mass)
+    // A threshold bin past `histBinCollectMax` (degenerate tie mass)
     // falls back to the r17 sharded-prefix-sum exact rank, which remains
     // the all-sizes-safe path and is spec-pinned output-identical.
     val histBins = 8192
@@ -339,7 +349,7 @@ object Sampling {
     * expected occupancy is N/8192) the exact-rank fallback runs instead.
     * ~32 B/key tuple ≈ 32 MB at the bound.
     */
-  private[graft] var histBinCollectMax: Long = 1L << 20
+  private[graft] val HistBinCollectMax: Long = 1L << 20
 
   /** Cluster-prototypicality pruning (SSL-prototypes, Sorscher et al.
     * "Beyond neural scaling laws", 2022 — the pruning half of D4,

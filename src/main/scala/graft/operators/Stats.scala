@@ -67,7 +67,7 @@ object Stats {
     * k-th smallest element for k = max(1, ceil(p*n)) — rank error ZERO,
     * strictly stronger than any sketch bound.
     *
-    * Cost honesty (sf10 A/B, tools/QuantProbe): this is NOT a speedup
+    * Cost honesty (sf10 A/B, NOTES.md round 14): this is NOT a speedup
     * over `approx_percentile` — the sketch does one pass at ~30-40
     * core-s where the census + selection's two full scans measure
     * ~130-170. Its value is EXACTNESS at scale: `exactQuantiles`'
@@ -168,7 +168,7 @@ object Stats {
     * instead of a second full pass.
     *
     * `approxQuantiles` + a verification scan costs sketch + check
-    * (~47 core-s at sf10, tools/QuantProbe); the census at 1024 bins is
+    * (~47 core-s at sf10, NOTES.md round 17); the census at 1024 bins is
     * ~10 core-s and already CONTAINS the verification: for the chosen
     * element q = max(crossing bin b*), rank_le(q) = cum(b*) exactly, and
     * rank_lt(q) is exact when the bin is single-valued (mn == mx) and

@@ -188,6 +188,21 @@ class OperatorsSpec extends SparkSpec {
     } finally withNull.unpersist()
   }
 
+  test("driver union-find declines non-integral ids: string-keyed pairs are labelled, not dropped") {
+    val s = spark
+    import s.implicits._
+    val pairs = Seq(("a", "b"), ("b", "c"), ("x", "y")).toDF("doc_a", "doc_b").persist()
+    try {
+      pairs.count()
+      assert(Dedup.smallGraphLabels(pairs).isEmpty)
+      val want = Map("a" -> "a", "b" -> "a", "c" -> "a", "x" -> "x", "y" -> "x")
+      Seq(Dedup.nearDupClusters(pairs), Dedup.nearDupClustersStar(pairs)).foreach { df =>
+        val r = df.collect().map(x => x.getAs[String]("doc") -> x.getAs[String]("cluster")).toMap
+        assert(r === want)
+      }
+    } finally pairs.unpersist()
+  }
+
   test("near-dup clustering: chains collapse to min-id components") {
     val s = spark
     import s.implicits._
@@ -434,17 +449,15 @@ class OperatorsSpec extends SparkSpec {
     val raw = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
     val target = Seq((100L, "target like tokens appear here often"),
       (101L, "alpha beta gamma appears in target too")).toDF("doc_id", "text")
-    def run(): Map[Long, (Long, Double, Long)] =
-      Sampling.importanceResample(raw, target, "text", "doc_id", 64, 0.5)
+    def run(histBinCollectMax: Long): Map[Long, (Long, Double, Long)] =
+      Sampling.importanceResample(raw, target, "text", "doc_id", 64, 0.5,
+          histBinCollectMax)
         .collect().map(r => r.getAs[Long]("doc_id") ->
           ((r.getAs[Long]("n_feats"), r.getAs[Double]("log_weight"),
             r.getAs[Long]("keep")))).toMap
-    val viaHist = run()
+    val viaHist = run(Sampling.HistBinCollectMax)
     // force the exact-rank fallback through the tie-mass guard
-    val saved = Sampling.histBinCollectMax
-    val viaRank =
-      try { Sampling.histBinCollectMax = 0L; run() }
-      finally { Sampling.histBinCollectMax = saved }
+    val viaRank = run(0L)
     assert(viaHist === viaRank)
     // the cut is exactly floor(0.5 * n) keeps
     assert(viaHist.values.count(_._3 == 1L) ===

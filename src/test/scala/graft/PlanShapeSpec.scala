@@ -610,4 +610,37 @@ class PlanShapeSpec extends SparkSpec {
     }
     assert(p.toString.contains("HashAggregate"))
   }
+
+  test("derived state: resetDerivedCaches releases every memoized frame, and the next read rebuilds") {
+    import org.apache.spark.storage.StorageLevel
+    SparkEntry.warm(spark, sf)
+    val serving = SparkEntry.servingTables(spark, sf)
+    val recorded = serving.toSeq :+ ("ivf cells" -> SparkEntry.ivfIndex(spark, sf).cells)
+    recorded.foreach { case (n, df) =>
+      assert(df.storageLevel != StorageLevel.NONE, s"$n not persisted after warm") }
+    SparkEntry.resetDerivedCaches()
+    recorded.foreach { case (n, df) =>
+      assert(df.storageLevel === StorageLevel.NONE, s"$n still persisted after reset") }
+    val rebuilt = SparkEntry.servingTables(spark, sf)
+    assert(rebuilt.keySet === serving.keySet)
+    rebuilt.foreach { case (n, df) =>
+      assert(!(df eq serving(n)), s"$n: reset kept the old frame")
+      assert(df.storageLevel != StorageLevel.NONE, s"$n not persisted after rebuild")
+    }
+  }
+
+  test("bench stdout line fits its budget when every query failed or the task_sec block alone overflows") {
+    val names = SparkEntry.queries.keys.toSeq.sorted
+    val sfField = s""","sf":"$sf""""
+    val allFailed = Bench.printedLine(names.map(_ -> -1.0), Map.empty, 3 * names.length, sfField)
+    assert(allFailed.length <= Bench.Budget, allFailed)
+    assert(allFailed.contains(s""""value":0.000""") && allFailed.contains(""""sum":0.000"""))
+    // a suffix long enough that even an empty query map plus the top-20
+    // task_sec block exceeds the budget: task_sec must be dropped too
+    val longSf = s""","sf":"${"/d" * 600}""""
+    val timed = names.zipWithIndex.map { case (n, i) => n -> (1.0 + i) }
+    val line = Bench.printedLine(timed, names.map(_ -> 12.34).toMap, 0, longSf)
+    assert(line.length <= Bench.Budget, s"${line.length} chars")
+    assert(!line.contains("task_sec") && line.contains(s""""omitted":{"n":${names.length},"""))
+  }
 }
