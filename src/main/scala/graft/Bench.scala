@@ -171,8 +171,8 @@ object Bench {
   private[graft] val Budget = 1800 // 2000-char tail minus the sbt epilogue, with margin
 
   /** The stdout line, at most [[Budget]] chars, from per-query seconds
-    * (`-1` = failed), summed task-seconds per query, the count of failed
-    * timed runs, and `suffix` (baseline fields and the sf dir).
+    * (`-1` = failed), summed task-seconds per query, and `suffix`
+    * (baseline fields and the sf dir).
     *
     * The line is parsed from the last 2000 chars of stdout, and sbt's
     * "[success] Total time" epilogue lands after it inside that window.
@@ -184,8 +184,11 @@ object Bench {
     * self-consistent: value == sum(queries) + omitted.sum.
     */
   private[graft] def printedLine(results: Seq[(String, Double)], taskSec: Map[String, Double],
-                                 timedFails: Int, suffix: String): String = {
+                                 suffix: String): String = {
     val total = results.collect { case (_, v) if v >= 0 => v }.sum
+    // failed queries, not failed timed runs: a query that fails in every
+    // pass is one failure
+    val failed = results.count(_._2 < 0)
     val fullLine = render(total, results, suffix)
     // Deterministic per-query task-seconds for the slowest rows ride the
     // printed line: wall clock on a shared host swings with external
@@ -211,7 +214,7 @@ object Bench {
       def shrunk(keep: Int, ts: String): String = {
         val omitted = bySlowest.drop(keep)
         val omittedSecs = omitted.collect { case (_, v) if v >= 0 => v }.sum
-        val extra = s""","omitted":{"n":${omitted.length},"sum":${fmt(omittedSecs)},"failed":$timedFails,"full":"BENCH_LOCAL.json"}$ts"""
+        val extra = s""","omitted":{"n":${omitted.length},"sum":${fmt(omittedSecs)},"failed":$failed,"full":"BENCH_LOCAL.json"}$ts"""
         render(total, bySlowest.take(keep), extra + suffix)
       }
       // largest prefix of slowest-first entries whose rendered line fits;
@@ -392,7 +395,7 @@ object Bench {
         }
       }
     if (timedFails > 0)
-      System.err.println(s"[bench] timed pass: $timedFails queries failed")
+      System.err.println(s"[bench] timed passes: $timedFails query runs failed")
     // the full map goes to BENCH_LOCAL.json; stdout gets printedLine
     val total = results.collect { case (_, v) if v >= 0 => v }.sum
     // same-window baseline (see duckBaseline): runs AFTER the engine's
@@ -434,8 +437,7 @@ object Bench {
     val fullRecord = fullLine.patch(fullLine.lastIndexOf("}"), metricsJson + duckJson + "}", 1)
     try java.nio.file.Files.writeString(java.nio.file.Paths.get("BENCH_LOCAL.json"), fullRecord + "\n")
     catch { case _: Throwable => () }
-    val line = printedLine(results, planMetrics.map { case (k, m) => k -> m._3 }.toMap,
-      timedFails, suffix)
+    val line = printedLine(results, planMetrics.map { case (k, m) => k -> m._3 }.toMap, suffix)
     println(line)
     System.out.flush()
     spark.stop()

@@ -4,6 +4,8 @@ import graft.plugs.Plug
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.types._
+import org.apache.spark.storage.StorageLevel
 
 /** Structured-Streaming execution of a plug (reference: the hand-rolled
   * PL/pgSQL micro-batch loop `hpp.sync_plug`, database/sql/sync.sql:31-39 +
@@ -51,16 +53,28 @@ class PlugRunner(
   val StateKeepLast: Int = 2
 
   def processBatch(batch: DataFrame, batchId: Long): Unit = {
+    // read the input once: every table and the check-in derive from this
+    // in-memory copy, and it is gone again when the batch returns
+    val input = own(batch).persist(StorageLevel.MEMORY_ONLY)
+    try commitBatch(input, batchId) finally input.unpersist(blocking = true)
+  }
+
+  private def commitBatch(batch: DataFrame, batchId: Long): Unit = {
     val tables = plug.transform(batch)
     tables.foreach { case (name, df) =>
       mergeFns.get(name) match {
         case Some(fn) =>
           val store = new ParquetStateStore(df.sparkSession, tableDir(name))
-          val prior = store.readBefore(batchId)
+          // read with the schema the merge writes: no inference job
+          val prior = store.readBefore(batchId, Some(fn(None, tables).schema))
           store.commit(batchId, fn(prior, tables))
           store.prune(StateKeepLast)
         case None =>
-          val withBatch = df.withColumn("_batch_id", lit(batchId))
+          // the id goes in as a string literal, which generated code holds
+          // as a reference; an int or long literal is written into the code
+          // itself, so every batch would compile new classes. The directory
+          // is `_batch_id=<id>` either way.
+          val withBatch = df.withColumn("_batch_id", lit(batchId.toString))
           val (partCols, out) =
             if (df.columns.contains("block_num"))
               (Seq("_batch_id", "_block_bucket"),
@@ -82,22 +96,36 @@ class PlugRunner(
           val bDir = new org.apache.hadoop.fs.Path(
             tableDir(name), s"_batch_id=$batchId")
           val bFs = bDir.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
-          if (bFs.exists(bDir)) {
-            val m = manifest(df.sparkSession, name)
-            writeManifest(df.sparkSession, name,
-              m.copy(live = (m.live.toSet + batchId).toSeq.sorted))
-          }
+          val read = manifest(df.sparkSession, name)
+          val m =
+            if (!bFs.exists(bDir)) read
+            else {
+              val added = read.copy(live = (read.live.toSet + batchId).toSeq.sorted)
+              writeManifest(df.sparkSession, name, added)
+              added
+            }
           // keep the directory count bounded: once enough per-batch
           // partitions accumulate, fold everything before this batch into
           // a compact segment (ids < batchId are past their replay window
           // — their source offsets committed before this batch started)
-          if (CompactEvery > 0 && manifest(df.sparkSession, name).live.size >= CompactEvery)
+          if (CompactEvery > 0 && m.live.size >= CompactEvery)
             compactAppends(df.sparkSession, name, batchId - 1)
       }
     }
     // engine metadata (hpp.plug_state equivalent, §1.1-B): cursor + check-in
     PlugState.checkIn(batch.sparkSession, outDir, plug.name, batchId, batch)
   }
+
+  /** The batch under a plan that is this runner's alone. Spark's
+    * CacheManager keeps one entry for all equal plans of a session, so two
+    * runners persisting the same range (the same op-log read, as plugs
+    * over one op type do) would share it, and one runner's unpersist would
+    * drop blocks the other is still reading. A constant column naming the
+    * runner's table root, dropped again, makes the plans differ; the
+    * optimizer prunes it, so nothing of it is computed or cached.
+    */
+  private[graft] def own(batch: DataFrame): DataFrame =
+    batch.withColumn("_graft_runner", lit(s"$outDir/${plug.name}")).drop("_graft_runner")
 
   /** Batch backfill over a historical block range in bounded chunks — the
     * reference's catch-up/massive-sync mode (T2): process the history as
@@ -588,15 +616,23 @@ object PlugState {
     */
   val KeepLast: Int = 8
 
+  /** Record batch `batchId`'s cursor. The cursor is collected and the row
+    * built from it in the JVM: the batch id and the check-in time as plan
+    * literals would be written into the generated code (the check-in time
+    * is `current_timestamp()`, folded to a literal), so every batch would
+    * compile new classes.
+    */
   def checkIn(spark: SparkSession, outDir: String, plugName: String,
               batchId: Long, batch: DataFrame): Unit = {
     val cursor = batch.agg(
       max(col("block_num")).as("latest_block_num"),
       max(col("timestamp")).as("latest_block_time"))
-    cursor
-      .withColumn("plug", lit(plugName))
-      .withColumn("batch_id", lit(batchId))
-      .withColumn("check_in", current_timestamp())
+    val row = org.apache.spark.sql.Row.fromSeq(cursor.head().toSeq ++
+      Seq(plugName, batchId, java.sql.Timestamp.from(java.time.Instant.now())))
+    val schema = cursor.schema.add("plug", StringType, nullable = false)
+      .add("batch_id", LongType, nullable = false)
+      .add("check_in", TimestampType, nullable = false)
+    spark.createDataFrame(java.util.List.of(row), schema)
       .write.mode("overwrite").parquet(s"$outDir/$plugName/_plug_state/v=$batchId")
     prune(spark, outDir, plugName)
   }
@@ -780,8 +816,14 @@ class ParquetStateStore(spark: SparkSession, dir: String,
     */
   def allVersions: Seq[Long] = versions
 
-  def readBefore(batchId: Long): Option[DataFrame] =
-    versions.filter(_ < batchId).lastOption.map(v => spark.read.parquet(s"$dir/$prefix$v"))
+  /** The newest committed version below `batchId`. Given `schema` (the
+    * schema the version was written with), the read runs no
+    * schema-inference job.
+    */
+  def readBefore(batchId: Long, schema: Option[StructType] = None): Option[DataFrame] =
+    versions.filter(_ < batchId).lastOption.map { v =>
+      schema.fold(spark.read)(s => spark.read.schema(s)).parquet(s"$dir/$prefix$v")
+    }
 
   def read(): Option[DataFrame] =
     latestVersion.map(v => spark.read.parquet(s"$dir/$prefix$v"))

@@ -2,7 +2,6 @@ package graft.streaming
 
 import graft.plugs.Polls
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 
 /** Cross-batch state maintenance for the polls plug: `content` is a keyed
   * state table (first-create-wins insert-if-absent + guarded soft-delete,
@@ -13,35 +12,11 @@ object PollsStreaming {
   def runner(outDir: String): PlugRunner =
     new PlugRunner(Polls, outDir, Map("content" -> mergeContent _))
 
-  /** prior ∪ (new creates not already present), then apply this batch's
-    * deletes to *all* rows (a delete may target a poll created in an
-    * earlier batch). Deletes are joined per-op and filtered on each row's
-    * liveness window BEFORE any per-key reduction — collapsing to the
-    * earliest delete first would let a non-qualifying early delete mask a
-    * later valid one. Idempotent: re-merging the same batch is a no-op.
+  /** The prior version folded with this batch's creates and deletes
+    * ([[Polls.foldContent]]: prior rows win, and a delete may target a
+    * poll created in an earlier batch). Idempotent: re-merging the same
+    * batch onto the same prior is a no-op.
     */
-  def mergeContent(prior: Option[DataFrame], batch: Map[String, DataFrame]): DataFrame = {
-    val batchContent = batch("content")
-    val deletes = batch("deletes")
-      .select("author", "permlink", "del_created", "del_block", "del_trx", "del_opid")
-    val all = prior match {
-      case Some(p) =>
-        p.unionByName(
-          batchContent.join(p.select("author", "permlink"), Seq("author", "permlink"), "left_anti"))
-      case None => batchContent
-    }
-    // chain-order guard matches Polls.transform: the delete must follow
-    // the create in chain order AND land inside the liveness window
-    val hit = all.select(col("author"), col("permlink"), col("block_num"),
-        col("trx_in_block"), col("poll_opid"), col("expires"))
-      .join(deletes, Seq("author", "permlink"))
-      .filter(
-        struct(col("del_block"), col("del_trx"), col("del_opid")) >
-          struct(col("block_num"), col("trx_in_block"), col("poll_opid")) &&
-        col("expires").isNotNull && col("expires") >= col("del_created"))
-      .select(col("author"), col("permlink")).distinct()
-    all.join(hit.withColumn("_del", lit(true)), Seq("author", "permlink"), "left")
-      .withColumn("deleted", col("deleted") || coalesce(col("_del"), lit(false)))
-      .drop("_del")
-  }
+  def mergeContent(prior: Option[DataFrame], batch: Map[String, DataFrame]): DataFrame =
+    Polls.foldContent(prior, Polls.creates(batch("ops")), batch("deletes"))
 }

@@ -632,14 +632,16 @@ class PlanShapeSpec extends SparkSpec {
   test("bench stdout line fits its budget when every query failed or the task_sec block alone overflows") {
     val names = SparkEntry.queries.keys.toSeq.sorted
     val sfField = s""","sf":"$sf""""
-    val allFailed = Bench.printedLine(names.map(_ -> -1.0), Map.empty, 3 * names.length, sfField)
+    val allFailed = Bench.printedLine(names.map(_ -> -1.0), Map.empty, sfField)
     assert(allFailed.length <= Bench.Budget, allFailed)
     assert(allFailed.contains(s""""value":0.000""") && allFailed.contains(""""sum":0.000"""))
+    // failed queries, not failed timed runs over the passes
+    assert(allFailed.contains(s""""failed":${names.length},"""), allFailed)
     // a suffix long enough that even an empty query map plus the top-20
     // task_sec block exceeds the budget: task_sec must be dropped too
     val longSf = s""","sf":"${"/d" * 600}""""
     val timed = names.zipWithIndex.map { case (n, i) => n -> (1.0 + i) }
-    val line = Bench.printedLine(timed, names.map(_ -> 12.34).toMap, 0, longSf)
+    val line = Bench.printedLine(timed, names.map(_ -> 12.34).toMap, longSf)
     assert(line.length <= Bench.Budget, s"${line.length} chars")
     assert(!line.contains("task_sec") && line.contains(s""""omitted":{"n":${names.length},"""))
   }

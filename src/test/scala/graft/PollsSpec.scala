@@ -151,4 +151,45 @@ class PollsSpec extends SparkSpec {
     val content = Polls.transform(shuffled)("content").collect()
     assert(content.length === 1 && content.head.getAs[String]("question") === "Best color?")
   }
+
+  test("fold: a key with deletes but no create, before or now, yields no row") {
+    val log = opLog(spark, Seq(
+      op(1, 100, 0, "2024-01-01 00:00:00", "polls",
+        pollCreate("p", "Q?", Seq("a", "b"), "2024-01-02 00:00:00", "t"), postingAuth = "alice"),
+      op(2, 101, 0, "2024-01-01 01:00:00", "polls", pollDelete("ghost"), postingAuth = "alice")))
+    val once = Polls.transform(log)
+    assert(once("content").collect().map(_.getAs[String]("permlink")).toSeq === Seq("p"))
+    // and on top of a prior version that never held the key either
+    val later = Polls.transform(opLog(spark, Seq(
+      op(3, 200, 0, "2024-01-01 02:00:00", "polls", pollDelete("ghost"), postingAuth = "bob"))))
+    val merged = graft.streaming.PollsStreaming.mergeContent(Some(once("content")), later)
+    assert(merged.collect().map(_.getAs[String]("permlink")).toSeq === Seq("p"))
+  }
+
+  test("fold: a prior row beats a same-key create in a replayed batch") {
+    // the replayed create is EARLIER in chain order than the committed
+    // row: only the prior-first rank keeps the committed row
+    val prior = Polls.transform(opLog(spark, Seq(
+      op(5, 200, 0, "2024-01-01 00:00:00", "polls",
+        pollCreate("p", "Committed?", Seq("a"), "2024-01-09 00:00:00", "t"),
+        postingAuth = "alice"))))("content")
+    val replay = Polls.transform(opLog(spark, Seq(
+      op(1, 100, 0, "2023-12-31 00:00:00", "polls",
+        pollCreate("p", "Replayed?", Seq("x"), "2024-01-09 00:00:00", "t"),
+        postingAuth = "alice"))))
+    val merged = graft.streaming.PollsStreaming.mergeContent(Some(prior), replay).collect()
+    assert(merged.length === 1)
+    assert(merged.head.getAs[String]("question") === "Committed?")
+    assert(merged.head.getAs[Long]("poll_opid") === 5L)
+  }
+
+  test("fold: a delete at the expiry instant counts, one after it does not") {
+    def deletedWithDeleteAt(at: String): Boolean = Polls.transform(opLog(spark, Seq(
+      op(1, 100, 0, "2024-01-01 00:00:00", "polls",
+        pollCreate("p", "Q?", Seq("a", "b"), "2024-01-02 00:00:00", "t"), postingAuth = "alice"),
+      op(2, 101, 0, at, "polls", pollDelete("p"), postingAuth = "alice"))))("content")
+      .collect().head.getAs[Boolean]("deleted")
+    assert(deletedWithDeleteAt("2024-01-02 00:00:00"))
+    assert(!deletedWithDeleteAt("2024-01-02 00:00:01"))
+  }
 }

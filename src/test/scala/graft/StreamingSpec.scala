@@ -52,6 +52,73 @@ class StreamingSpec extends SparkSpec {
     assert(runner.table(spark, "updates").count() === 2)
   }
 
+  /** Batch `i` of every plug's ops, the same shape in every batch. */
+  private def mixedBatch(i: Int): Seq[org.apache.spark.sql.Row] = {
+    val b = 100 + 10 * i
+    val at = f"2024-01-01 00:$i%02d:00"
+    val transfer =
+      s"""{"contractName": "tokens", "contractAction": "transfer",
+         | "contractPayload": {"symbol": "BEE", "to": "bob$i", "quantity": "1.5"}}"""
+        .stripMargin.replace("\n", "")
+    Seq(
+      op(10L * i, b, 0, at, "podping", podpingV03(Seq(s"u$i", s"v$i"))),
+      op(10L * i + 1, b, 1, at, "polls",
+        pollCreate(s"p$i", s"Q$i?", Seq("a", "b"), "2024-02-01 00:00:00", "t"),
+        postingAuth = s"user$i"),
+      op(10L * i + 2, b + 1, 0, at, "polls", pollVote(s"user$i", s"p$i", 1), postingAuth = "voter"),
+      op(10L * i + 3, b + 2, 0, at, "polls", pollDelete(s"p${i / 2}"), postingAuth = s"user${i / 2}"),
+      op(10L * i + 4, b + 3, 0, at, "ssc-mainnet-hive", transfer))
+  }
+
+  test("plug batches compile no new classes from the third batch on") {
+    // each batch its own parquet dir: batches differ in data only, so a
+    // batch whose values reached the generated code would compile anew
+    val src = tmp(); val out = tmp()
+    (0 until 6).foreach(i => writeBatch(src, i, mixedBatch(i)))
+    val runners = Seq(new PlugRunner(Podping, out), PollsStreaming.runner(out),
+      new PlugRunner(graft.plugs.HiveEngine, out))
+    def compiled = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val counts = (0 until 6).map { i =>
+      val batch = spark.read.schema(OpLog.schema).parquet(s"$src/b$i")
+      runners.foreach(_.processBatch(batch, i.toLong))
+      compiled
+    }
+    assert(counts(5) === counts(1), s"compilations after each batch: ${counts.mkString(",")}")
+    assert(runners(1).table(spark, "content").count() === 6)
+    assert(runners(2).table(spark, "transfers").count() === 6)
+  }
+
+  test("runners over equal input plans: concurrent batches stay private, nothing stays cached") {
+    val src = tmp(); val out = tmp()
+    (0 until 6).foreach(i => writeBatch(src, 0, mixedBatch(i)))
+    val log = spark.read.schema(OpLog.schema).parquet(s"$src/b0")
+    // one op-log read per plug, as the plug threads of a deployment do:
+    // equal plans, each runner persisting its own copy
+    def range(i: Int) = OpLog.blockRange(log, 100 + 10 * i, 109 + 10 * i, Seq(OpLog.CustomJsonOpType))
+    val runners = Seq(new PlugRunner(Podping, out), PollsStreaming.runner(out),
+      new PlugRunner(graft.plugs.HiveEngine, out))
+    def plan(r: PlugRunner) = r.own(range(0)).queryExecution.analyzed
+    assert(plan(runners(0)).sameResult(plan(runners(0))))
+    assert(!plan(runners(0)).sameResult(plan(runners(2))))
+    val cachedBefore = spark.sparkContext.getPersistentRDDs.keySet
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(runners.size)
+    val ec = scala.concurrent.ExecutionContext.fromExecutor(pool)
+    val runs = runners.map(r =>
+      scala.concurrent.Future((0 until 6).foreach(i => r.processBatch(range(i), i.toLong)))(ec))
+    try runs.foreach(scala.concurrent.Await.result(_, scala.concurrent.duration.Duration.Inf))
+    finally pool.shutdown()
+    runners.zip(Seq(Podping, graft.plugs.Polls, graft.plugs.HiveEngine)).foreach { case (r, p) =>
+      // a table the fixture leaves empty was never written, so has no schema
+      p.transform(log).filterNot(_._2.isEmpty).foreach { case (name, oneShot) =>
+        val streamed = r.table(spark, name).select(oneShot.columns.map(c => col(s"`$c`")): _*)
+        assert(streamed.exceptAll(oneShot).count() === 0, s"${p.name}.$name: extra rows")
+        assert(oneShot.exceptAll(streamed).count() === 0, s"${p.name}.$name: missing rows")
+      }
+      assert(r.own(range(5)).storageLevel === org.apache.spark.storage.StorageLevel.NONE)
+    }
+    assert(spark.sparkContext.getPersistentRDDs.keySet === cachedBefore)
+  }
+
   test("append compaction: segments fold batch dirs; reads identical; folded ids stay excluded") {
     val src = tmp(); val out = tmp()
     val runner = new PlugRunner(Podping, out)
