@@ -2,7 +2,7 @@
 """Local emulation of the driver's correctness gate: read each Verify output
 parquet, run the matching oracle SQL in DuckDB over the same sf dir, compare
 schema + row values. Dev tool only (driver-side python)."""
-import sys, json, glob, math
+import sys, json, glob, math, shutil, tempfile
 from decimal import Decimal
 
 import duckdb
@@ -27,7 +27,18 @@ def norm(v):
 
 
 def main(sf_dir, out_dir, only=None):
-    con = duckdb.connect()
+    # an in-memory database still spills to disk, by default into `.tmp/`
+    # under the working directory; a killed large compare once left 42 GB
+    # there. Spill into a private directory removed on every exit path.
+    spill = tempfile.mkdtemp(prefix="check_local_spill_")
+    try:
+        return compare(sf_dir, out_dir, only, spill)
+    finally:
+        shutil.rmtree(spill, ignore_errors=True)
+
+
+def compare(sf_dir, out_dir, only, spill):
+    con = duckdb.connect(config={"temp_directory": spill})
     for t in TABLES:
         con.sql(f"CREATE OR REPLACE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))

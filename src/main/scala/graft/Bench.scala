@@ -158,7 +158,7 @@ object Bench {
     }
 
   private def fmt(v: Double): String = String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-  private def fmt2(v: Double): String = String.format(java.util.Locale.ROOT, "%.2f", Double.box(v))
+  private def fmt1(v: Double): String = String.format(java.util.Locale.ROOT, "%.1f", Double.box(v))
 
   /** `{"metric":"total",...}` over the per-query seconds `rs`; `tail` is
     * spliced in after the query map.
@@ -194,14 +194,14 @@ object Bench {
     // printed line: wall clock on a shared host swings with external
     // load, while summed task time is plan-invariant — a diff can then
     // separate plan changes from host drift without the full BENCH_LOCAL
-    // record. Top 20 by wall, 2-decimal, ~600 chars of the tail budget.
-    val taskSecJson = {
-      val top = results.filter(_._2 >= 0).sortBy(-_._2).take(20)
-        .flatMap { case (n, _) => taskSec.get(n).map(t => "\"" + n + "\":" + fmt2(t)) }
-      if (top.isEmpty) "" else s""","task_sec":${top.mkString("{", ",", "}")}"""
-    }
-    if (fullLine.length + taskSecJson.length <= Budget)
-      render(total, results, taskSecJson + suffix)
+    // record. At most the 12 slowest by wall, 1-decimal.
+    val timedTop = results.filter(_._2 >= 0).sortBy(-_._2).take(12)
+      .flatMap { case (n, _) => taskSec.get(n).map(t => "\"" + n + "\":" + fmt1(t)) }
+    def taskSecJson(k: Int): String =
+      if (k == 0) "" else s""","task_sec":${timedTop.take(k).mkString("{", ",", "}")}"""
+    val allTaskSec = taskSecJson(timedTop.length)
+    if (fullLine.length + allTaskSec.length <= Budget)
+      render(total, results, allTaskSec + suffix)
     else if (fullLine.length <= Budget) fullLine
     else {
       // failures (sentinel -1) sort LAST, not as if they took 1 second:
@@ -217,11 +217,15 @@ object Bench {
         val extra = s""","omitted":{"n":${omitted.length},"sum":${fmt(omittedSecs)},"failed":$failed,"full":"BENCH_LOCAL.json"}$ts"""
         render(total, bySlowest.take(keep), extra + suffix)
       }
-      // largest prefix of slowest-first entries whose rendered line fits;
-      // when even an empty query map does not fit, task_sec goes too
-      (bySlowest.length - 1 to 0 by -1).iterator.map(shrunk(_, taskSecJson))
-        .find(_.length <= Budget)
-        .getOrElse(shrunk(0, ""))
+      // the largest prefix of slowest-first entries that fits beside `ts`
+      def rows(ts: String): Int =
+        (bySlowest.length - 1 to 0 by -1).find(shrunk(_, ts).length <= Budget).getOrElse(-1)
+      // task_sec gives up its last rows while the query rows would number
+      // under half the queries; when even an empty query map does not
+      // fit beside one row, task_sec goes entirely
+      val ts = (timedTop.length to 1 by -1).iterator.map(taskSecJson)
+        .find(rows(_) >= (results.length + 1) / 2).getOrElse("")
+      shrunk(rows(ts) max 0, ts)
     }
   }
 

@@ -301,7 +301,13 @@ object Sampling {
         .select(col("doc").as(idCol), col("n_feats"), col("log_weight"),
           when(col("_r") <= col("_kk"), lit(1L)).otherwise(lit(0L)).as("keep"))
     }
-    if (hi <= lo) exactRankKeep() // degenerate one-point weight domain
+    // the threshold bin's keys come back as (double, long), so ids of
+    // another type (strings) rank on the exact path, as does a one-point
+    // weight domain
+    import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
+    val longIds = Seq(LongType, IntegerType, ShortType, ByteType)
+      .contains(scored.schema("doc").dataType)
+    if (hi <= lo || !longIds) exactRankKeep()
     else {
       // bin by rounded weight; clamp round()'s <=5e-7 endpoint spill
       val binCol = least(lit(histBins - 1), greatest(lit(0),

@@ -35,15 +35,6 @@ class PlugRunner(
 
   def tableDir(name: String): String = s"$outDir/${plug.name}/$name"
 
-  /** Process one micro-batch (callable directly for batch backfill — the
-    * reference's "massive sync" mode, sync.sql:58-77, is exactly this
-    * function over a historical block range).
-    *
-    * Append tables carrying `block_num` are additionally partitioned by a
-    * coarse block bucket — the storage-layout replacement for the
-    * reference's B-tree indexes on block_num (SURVEY §4): block-range
-    * predicates (F1) prune whole directories at scan planning time.
-    */
   /** How many state versions to retain after each commit: old versions
     * only exist to serve replay of *their* batch, and the stream is never
     * more than one batch behind — keep the committed version plus its
@@ -52,11 +43,41 @@ class PlugRunner(
     */
   val StateKeepLast: Int = 2
 
+  /** Process one micro-batch (callable directly for batch backfill — the
+    * reference's "massive sync" mode, sync.sql:58-77, is exactly this
+    * function over a historical block range).
+    *
+    * Append tables carrying `block_num` are additionally partitioned by a
+    * coarse block bucket — the storage-layout replacement for the
+    * reference's B-tree indexes on block_num (SURVEY §4): block-range
+    * predicates (F1) prune whole directories at scan planning time.
+    *
+    * The batch is read once, into memory, in one slice per
+    * `spark.sql.files.maxPartitionBytes` of the optimizer's size estimate,
+    * so every write, the check-in cursor and polls' content fold run one
+    * task per slice. A small batch is one slice: per-task set-up (the
+    * write job's Hadoop configuration, generated projections, the parquet
+    * writer) costs more than its rows, and with one partition the cursor
+    * aggregate needs no exchange. Slicing only merges splits (`coalesce`),
+    * and the estimate has two limits: for a block-range filter over a
+    * parquet scan it is the whole relation's size, an upper bound, so a
+    * range of a large log may keep more slices than its rows need; and a
+    * source without statistics reports `spark.sql.defaultSizeInBytes`, so
+    * it keeps its splits.
+    */
   def processBatch(batch: DataFrame, batchId: Long): Unit = {
     // read the input once: every table and the check-in derive from this
     // in-memory copy, and it is gone again when the batch returns
-    val input = own(batch).persist(StorageLevel.MEMORY_ONLY)
+    val owned = own(batch)
+    val input = owned.coalesce(slices(owned)).persist(StorageLevel.MEMORY_ONLY)
     try commitBatch(input, batchId) finally input.unpersist(blocking = true)
+  }
+
+  /** `ceil(estimated bytes / maxPartitionBytes)`, at least 1. */
+  private def slices(batch: DataFrame): Int = {
+    val bytes = batch.queryExecution.optimizedPlan.stats.sizeInBytes
+    val perTask = batch.sparkSession.sessionState.conf.filesMaxPartitionBytes
+    ((bytes + perTask - 1) / perTask).max(1).min(Int.MaxValue).toInt
   }
 
   private def commitBatch(batch: DataFrame, batchId: Long): Unit = {
@@ -268,11 +289,23 @@ class PlugRunner(
   private def manifestPath(name: String) =
     new org.apache.hadoop.fs.Path(tableDir(name), "_append_manifest")
 
+  /** Each append table's manifest as this runner last read or wrote it.
+    * The runner is its tables' one writer, so after the first read the
+    * copy [[writeManifest]] keeps is the file's content, and a batch or a
+    * read of [[table]] opens no file. [[truncateFromBatch]] reads the file
+    * again, as a fresh runner (a restart) does.
+    */
+  private val manifests =
+    new java.util.concurrent.ConcurrentHashMap[String, AppendManifest]()
+
+  private[streaming] def manifest(spark: SparkSession, name: String): AppendManifest =
+    manifests.computeIfAbsent(name, _ => readManifest(spark, name))
+
   /** Read the manifest; if absent (pre-manifest layout, or first write),
     * derive it from a one-time directory listing — the migration path
     * for tables written before the manifest existed.
     */
-  private[streaming] def manifest(spark: SparkSession, name: String): AppendManifest = {
+  private def readManifest(spark: SparkSession, name: String): AppendManifest = {
     val path = manifestPath(name)
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val parsed =
@@ -323,6 +356,7 @@ class PlugRunner(
     finally out.close()
     fs.delete(path, false)
     fs.rename(tmp, path)
+    manifests.put(name, m)
   }
 
   /** Batch-id partitions currently on disk for an append table — the
@@ -525,7 +559,8 @@ class PlugRunner(
           st.validateTruncateFrom(fromBatch)
           name -> Left(st)
         } else {
-          val m = manifest(spark, name)
+          val m = readManifest(spark, name)
+          manifests.put(name, m)
           require((m.segments ++ m.merged).forall(_ < fromBatch),
             s"append table $name folded batches >= $fromBatch into segments " +
               s"(watermarks ${(m.segments ++ m.merged).mkString(",")}) — fork " +

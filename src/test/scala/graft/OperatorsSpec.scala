@@ -473,6 +473,33 @@ class OperatorsSpec extends SparkSpec {
     }
   }
 
+  test("importance resample: string ids rank on the exact path and match the long-id output") {
+    val s = spark
+    import s.implicits._
+    // ties as above; zero-padded ids sort as strings the way the longs do
+    val texts = Seq.fill(3)("alpha beta gamma delta epsilon zeta") ++
+      Seq.fill(2)("spark shuffle exchange plan codegen whole stage") ++
+      Seq("quick brown fox lazy dog river bank",
+        "target like tokens appear here often often often",
+        "completely unrelated noise words zxq wvu tsr")
+    val targetTexts = Seq("target like tokens appear here often",
+      "alpha beta gamma appears in target too")
+    def run(id: org.apache.spark.sql.Column => org.apache.spark.sql.Column): Map[String, (Long, Double, Long)] = {
+      def corpus(ts: Seq[String], from: Int) =
+        ts.zipWithIndex.map { case (t, i) => ((from + i).toLong, t) }.toDF("doc_id", "text")
+          .withColumn("doc_id", id(col("doc_id")))
+      Sampling.importanceResample(corpus(texts, 0), corpus(targetTexts, 100),
+          "text", "doc_id", 64, 0.5)
+        .collect().map(r => r.getAs[Any]("doc_id").toString ->
+          ((r.getAs[Long]("n_feats"), r.getAs[Double]("log_weight"),
+            r.getAs[Long]("keep")))).toMap
+    }
+    val byLong = run(identity)
+    val byString = run(c => format_string("d%03d", c))
+    assert(byString === byLong.map { case (k, v) => f"d${k.toInt}%03d" -> v })
+    assert(byString.values.count(_._3 == 1L) === math.floor(0.5 * texts.size).toLong)
+  }
+
   test("tf-idf: corpus-wide terms score zero, distinctive terms rank first") {
     val r = TextAnalysis.tfidfTopTerms(docs, 2).collect()
     val byDoc = r.groupBy(_.getAs[Long]("doc"))

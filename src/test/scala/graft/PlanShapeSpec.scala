@@ -637,12 +637,32 @@ class PlanShapeSpec extends SparkSpec {
     assert(allFailed.contains(s""""value":0.000""") && allFailed.contains(""""sum":0.000"""))
     // failed queries, not failed timed runs over the passes
     assert(allFailed.contains(s""""failed":${names.length},"""), allFailed)
-    // a suffix long enough that even an empty query map plus the top-20
-    // task_sec block exceeds the budget: task_sec must be dropped too
+    // a suffix so long that not half the query rows fit beside even one
+    // task_sec row: task_sec must be dropped, and the slowest rows that
+    // fit without it still print
     val longSf = s""","sf":"${"/d" * 600}""""
     val timed = names.zipWithIndex.map { case (n, i) => n -> (1.0 + i) }
     val line = Bench.printedLine(timed, names.map(_ -> 12.34).toMap, longSf)
     assert(line.length <= Bench.Budget, s"${line.length} chars")
-    assert(!line.contains("task_sec") && line.contains(s""""omitted":{"n":${names.length},"""))
+    assert(!line.contains("task_sec") && line.contains(s""""queries":{"${timed.last._1}":"""), line)
+    val omitted = """"omitted":\{"n":([0-9]+)""".r.findFirstMatchIn(line).get.group(1).toInt
+    assert(omitted > 0 && omitted < names.length, line)
+  }
+
+  test("bench stdout line prints at least half the query rows beside task_sec and the baseline") {
+    val names = SparkEntry.queries.keys.toSeq.sorted
+    // seconds as a real run prints them; eighths are exact in binary, so
+    // the printed sums are exact
+    val timed = names.zipWithIndex.map { case (n, i) => n -> 0.125 * (i % 64 + 1) }
+    val suffix = s""","engine_total":22.510,"duck_total":29.460,"duck_warmed":true,"ratio":0.764,"sf":"$sf""""
+    val line = Bench.printedLine(timed, names.map(_ -> 3.14).toMap, suffix)
+    assert(line.length <= Bench.Budget, s"${line.length} chars")
+    assert(line.contains("task_sec"), line)
+    val rows = """"queries":\{([^}]*)\}""".r.findFirstMatchIn(line).get.group(1)
+      .split(",").map(e => BigDecimal(e.split(":")(1))).toSeq
+    assert(rows.size >= 55, s"${rows.size} query rows: $line")
+    def field(k: String) = BigDecimal(s""""$k":([0-9.]+)""".r.findFirstMatchIn(line).get.group(1))
+    assert(field("value") === rows.sum + field("sum"), line)
+    assert(field("value") === names.indices.map(i => BigDecimal(0.125) * (i % 64 + 1)).sum)
   }
 }

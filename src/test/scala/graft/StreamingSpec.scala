@@ -107,16 +107,102 @@ class StreamingSpec extends SparkSpec {
       scala.concurrent.Future((0 until 6).foreach(i => r.processBatch(range(i), i.toLong)))(ec))
     try runs.foreach(scala.concurrent.Await.result(_, scala.concurrent.duration.Duration.Inf))
     finally pool.shutdown()
-    runners.zip(Seq(Podping, graft.plugs.Polls, graft.plugs.HiveEngine)).foreach { case (r, p) =>
-      // a table the fixture leaves empty was never written, so has no schema
-      p.transform(log).filterNot(_._2.isEmpty).foreach { case (name, oneShot) =>
-        val streamed = r.table(spark, name).select(oneShot.columns.map(c => col(s"`$c`")): _*)
-        assert(streamed.exceptAll(oneShot).count() === 0, s"${p.name}.$name: extra rows")
-        assert(oneShot.exceptAll(streamed).count() === 0, s"${p.name}.$name: missing rows")
-      }
+    runners.zip(Plugs).foreach { case (r, p) =>
+      assertOneShot(r, p, log)
       assert(r.own(range(5)).storageLevel === org.apache.spark.storage.StorageLevel.NONE)
     }
     assert(spark.sparkContext.getPersistentRDDs.keySet === cachedBefore)
+  }
+
+  private val Plugs = Seq(Podping, graft.plugs.Polls, graft.plugs.HiveEngine)
+
+  /** Every table of `r` equals `p`'s one-shot transform of `log`, both ways. */
+  private def assertOneShot(r: PlugRunner, p: graft.plugs.Plug,
+                            log: org.apache.spark.sql.DataFrame): Unit =
+    // a table the fixture leaves empty was never written, so has no schema
+    p.transform(log).filterNot(_._2.isEmpty).foreach { case (name, oneShot) =>
+      val streamed = r.table(spark, name).select(oneShot.columns.map(c => col(s"`$c`")): _*)
+      assert(streamed.exceptAll(oneShot).count() === 0, s"${p.name}.$name: extra rows")
+      assert(oneShot.exceptAll(streamed).count() === 0, s"${p.name}.$name: missing rows")
+    }
+
+  /** The tasks of each job `body` runs, by what ran it: `append` for an
+    * append table's write, `cursor` for the check-in's cursor aggregate,
+    * `other` for the rest. A job is known by its SQL execution's call
+    * site, the first engine frame on the stack that started it.
+    */
+  private def tasksByKind(body: => Unit): Map[String, Seq[Int]] = {
+    import org.apache.spark.scheduler._
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    val kindOf = new java.util.concurrent.ConcurrentHashMap[String, String]()
+    val jobKind = new java.util.concurrent.ConcurrentHashMap[Int, String]()
+    val stageJob = new java.util.concurrent.ConcurrentHashMap[Int, Int]()
+    val tasks = new java.util.concurrent.ConcurrentHashMap[Int, Int]()
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case x: SparkListenerSQLExecutionStart =>
+          val caller = x.details.linesIterator.find(_.contains("graft.")).getOrElse("")
+          kindOf.put(x.executionId.toString,
+            if (caller.contains("PlugRunner.$anonfun$commitBatch")) "append"
+            else if (caller.contains("PlugState$.checkIn") && x.description.startsWith("head "))
+              "cursor"
+            else "other")
+        case _ => ()
+      }
+      override def onJobStart(j: SparkListenerJobStart): Unit = {
+        val exec = Option(j.properties).flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
+        jobKind.put(j.jobId, exec.flatMap(id => Option(kindOf.get(id))).getOrElse("other"))
+        j.stageIds.foreach(stageJob.put(_, j.jobId))
+        tasks.put(j.jobId, 0)
+      }
+      override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
+        tasks.merge(stageJob.get(t.stageId), 1, Integer.sum)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      body
+      org.apache.spark.sql.GraftBridge.drainListenerBus(spark)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    import scala.jdk.CollectionConverters._
+    tasks.asScala.toSeq.sortBy(_._1).groupMap(j => jobKind.get(j._1))(_._2)
+  }
+
+  test("a batch that fits one slice writes each append table and reads its cursor in one task") {
+    // each fixture batch is four parquet files, one source split each
+    val src = tmp(); val out = tmp()
+    (0 until 6).foreach(i => writeBatch(src, i, mixedBatch(i)))
+    val runners = Seq(new PlugRunner(Podping, out), PollsStreaming.runner(out),
+      new PlugRunner(graft.plugs.HiveEngine, out))
+    val byKind = tasksByKind((0 until 6).foreach { i =>
+      val batch = spark.read.schema(OpLog.schema).parquet(s"$src/b$i")
+      runners.foreach(_.processBatch(batch, i.toLong))
+    })
+    // per batch: podping 2 append tables, polls 3, hive_engine 4 written
+    // by this fixture; one cursor per runner
+    assert(byKind("append").size === 6 * 9, byKind)
+    assert(byKind("append").forall(_ == 1), byKind)
+    assert(byKind("cursor") === Seq.fill(6 * 3)(1), byKind)
+  }
+
+  test("a batch over several slices writes in several tasks and still equals the one-shot transform") {
+    val src = tmp(); val out = tmp()
+    (0 until 6).foreach(i => writeBatch(src, i, mixedBatch(i)))
+    val key = "spark.sql.files.maxPartitionBytes"
+    val prior = spark.conf.getOption(key)
+    val runners = Seq(new PlugRunner(Podping, out), PollsStreaming.runner(out),
+      new PlugRunner(graft.plugs.HiveEngine, out))
+    // a few KB per batch: each batch is several slices
+    spark.conf.set(key, "1024")
+    val byKind =
+      try tasksByKind((0 until 6).foreach { i =>
+        val batch = spark.read.schema(OpLog.schema).parquet(s"$src/b$i")
+        runners.foreach(_.processBatch(batch, i.toLong))
+      })
+      finally prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    assert(byKind("append").forall(_ > 1), byKind)
+    assert(spark.conf.getOption(key) === prior)
+    val log = spark.read.schema(OpLog.schema).parquet((0 until 6).map(i => s"$src/b$i"): _*)
+    runners.zip(Plugs).foreach { case (r, p) => assertOneShot(r, p, log) }
   }
 
   test("append compaction: segments fold batch dirs; reads identical; folded ids stay excluded") {
@@ -154,7 +240,8 @@ class StreamingSpec extends SparkSpec {
 
   test("manifest commit: 120 batches keep dirs bounded; crashed compaction replays clean") {
     val out = tmp()
-    val runner = new PlugRunner(Podping, out) { override val CompactEvery = 8 }
+    def compacting() = new PlugRunner(Podping, out) { override val CompactEvery = 8 }
+    var runner = compacting()
     def batch(i: Int) = opLog(spark, Seq(
       op(i.toLong, 100 + i, 0, "2024-01-01 00:00:00", "podping", podpingV03(Seq(s"u$i")))))
     def entries() = Option(new java.io.File(s"$out/podping/updates").list())
@@ -182,7 +269,9 @@ class StreamingSpec extends SparkSpec {
     // emulate by deleting the manifest (state strictly older than the
     // segment store, which is what the crash leaves). The re-derived
     // manifest + re-triggered compaction must converge, not double-count.
+    // A crash ends the process, so a fresh runner reads what is on disk.
     new java.io.File(s"$out/podping/updates/_append_manifest").delete()
+    runner = compacting()
     runner.processBatch(batch(120), 120L)
     assert(runner.table(spark, "updates").count() === 121)
 
@@ -219,6 +308,39 @@ class StreamingSpec extends SparkSpec {
       .count(_.startsWith("_batch_id="))
     assert(live < 3, s"live=$live") // folding kept the directory count bounded
     assert(runner.table(spark, "updates").count() === 7)
+  }
+
+  test("append manifests kept in memory: reads equal a fresh runner's over replay, compaction and a fork") {
+    val out = tmp()
+    def compacting() = new PlugRunner(Podping, out) { override val CompactEvery = 3 }
+    val runner = compacting()
+    def batch(i: Int, tag: String) = opLog(spark, Seq(
+      op(i.toLong, 100 + i, 0, "2024-01-01 00:00:00", "podping", podpingV03(Seq(s"$tag$i")))))
+    // a fresh runner reads each manifest from disk
+    def sameAsFresh(step: String, urls: Seq[String]): Unit = {
+      val fresh = compacting()
+      Seq("ops", "updates").foreach { t =>
+        val (kept, read) = (runner.table(spark, t), fresh.table(spark, t))
+        assert(kept.exceptAll(read).count() === 0 && read.exceptAll(kept).count() === 0, s"$step: $t")
+      }
+      assert(runner.table(spark, "updates").select("url").as[String](
+        org.apache.spark.sql.Encoders.STRING).collect().sorted.toSeq === urls.sorted, step)
+    }
+    def urls(n: Int) = (0 until n).map(i => s"u$i")
+    (0 until 5).foreach(i => runner.processBatch(batch(i, "u"), i.toLong))
+    sameAsFresh("folded", urls(5))
+    runner.processBatch(batch(4, "u"), 4L) // replay of the open batch
+    runner.processBatch(batch(1, "u"), 1L) // replay of a folded batch
+    sameAsFresh("replayed", urls(5))
+    // a fold every other batch; the eighth segment merges the tier
+    (5 until 20).foreach(i => runner.processBatch(batch(i, "u"), i.toLong))
+    assert(new java.io.File(s"$out/podping/updates/_compact").list().exists(_.startsWith("m=")))
+    sameAsFresh("merged", urls(20))
+    // a fork from batch 19, the one id still live, replayed as "c"
+    runner.truncateFromBatch(spark, Seq("ops", "updates"), 19L)
+    sameAsFresh("truncated", urls(19))
+    (19 until 21).foreach(i => runner.processBatch(batch(i, "c"), i.toLong))
+    sameAsFresh("forked", urls(19) ++ Seq("c19", "c20"))
   }
 
   test("plug_state check-in dirs stay bounded; cursor and max batch id survive folding") {
