@@ -1920,10 +1920,6 @@ object SparkEntry {
           .orderBy(col("cosine").desc, col("neighbor_id"))
           .rowsBetween(Window.unboundedPreceding, Window.currentRow)
         val configs = Seq((1, 0.10, "_h1"), (4, 0.30, "_h4"), (8, 0.45, "_h8"))
-        val ranked = configs.foldLeft(cand) { case (df, (np, _, h)) =>
-          df.withColumn(h + "r",
-            sum(when(col("cell_rank") <= np, 1).otherwise(0)).over(w))
-        }
         // exact ∪ ranked re-aggregated on the pair key instead of the
         // old left join (r17): the join exchanged BOTH sides from their
         // windows' probe_id partitioning to (probe_id, neighbor_id) and
@@ -1938,12 +1934,14 @@ object SparkEntry {
           configs.map { case (_, _, h) => lit(null).cast("long").as(h + "r") }
         val rankedCols = Seq(col("probe_id"), col("neighbor_id"),
           lit(0).as("_e"), col("cell_rank")) ++
-          configs.map { case (_, _, h) => col(h + "r") }
+          configs.map { case (np, _, h) =>
+            sum(when(col("cell_rank") <= np, 1).otherwise(0)).over(w).as(h + "r")
+          }
         val pairAggs = Seq(max(col("_e")).as("_e"),
           max(col("cell_rank")).as("cell_rank")) ++
           configs.map { case (_, _, h) => max(col(h + "r")).as(h + "r") }
         val paired = exact.select(exactCols: _*)
-          .unionByName(ranked.select(rankedCols: _*))
+          .unionByName(cand.select(rankedCols: _*))
           .groupBy(col("probe_id"), col("neighbor_id"))
           .agg(pairAggs.head, pairAggs.tail: _*)
         val hitCols = configs.map { case (np, _, h) =>
@@ -2008,10 +2006,6 @@ object SparkEntry {
           .orderBy(col("approx_dist"), col("neighbor_id"))
           .rowsBetween(Window.unboundedPreceding, Window.currentRow)
         val configs = Seq((1, 0.05, "_h1"), (2, 0.07, "_h2"), (4, 0.08, "_h4"))
-        val ranked = configs.foldLeft(cand) { case (df, (np, _, h)) =>
-          df.withColumn(h + "r",
-            sum(when(col("cell_rank") <= np, 1).otherwise(0)).over(w))
-        }
         // same union + pair-key re-aggregation as sim_ivf_recall (r17):
         // one exchange into a hash aggregate replaces the left join's
         // two exchanges + two sorts; aggregate values identical
@@ -2020,12 +2014,14 @@ object SparkEntry {
           configs.map { case (_, _, h) => lit(null).cast("long").as(h + "r") }
         val rankedCols = Seq(col("probe_id"), col("neighbor_id"),
           lit(0).as("_e"), col("cell_rank")) ++
-          configs.map { case (_, _, h) => col(h + "r") }
+          configs.map { case (np, _, h) =>
+            sum(when(col("cell_rank") <= np, 1).otherwise(0)).over(w).as(h + "r")
+          }
         val pairAggs = Seq(max(col("_e")).as("_e"),
           max(col("cell_rank")).as("cell_rank")) ++
           configs.map { case (_, _, h) => max(col(h + "r")).as(h + "r") }
         val paired = exact.select(exactCols: _*)
-          .unionByName(ranked.select(rankedCols: _*))
+          .unionByName(cand.select(rankedCols: _*))
           .groupBy(col("probe_id"), col("neighbor_id"))
           .agg(pairAggs.head, pairAggs.tail: _*)
         val hitCols = configs.map { case (np, _, h) =>

@@ -7,21 +7,19 @@ import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.types._
 
-/** Per-(probe, cell) asymmetric-distance (ADC) table, built EXECUTOR-SIDE —
-  * the distributed form of the driver-side table loop in
-  * [[graft.operators.Similarity.IvfPqIndex.topK]]: given a probe vector and
-  * one of its probed cells, emit the flat m×k table where entry
-  * `s*k + c` is the exact squared distance between the probe's residual
-  * subvector in subspace `s` (probe − cellCenter, dims beyond either
-  * length contribute 0) and codebook entry `c` — the SAME inner loop and
-  * accumulation order as the driver-side build, so the per-entry doubles
-  * are bit-identical.
+/** Per-(probe, cell) asymmetric-distance (ADC) table, built EXECUTOR-SIDE
+  * for both IVF-PQ query forms
+  * ([[graft.operators.Similarity.IvfPqIndex.rankedCandidates]] and
+  * `topKJoin`): given a probe vector and one of its probed cells, emit
+  * the flat m×k table where entry `s*k + c` is the exact squared
+  * distance between the probe's residual subvector in subspace `s`
+  * (probe − cellCenter, dims beyond either length contribute 0) and
+  * codebook entry `c`, accumulated sequentially over the subvector.
   *
   * Centers and codebooks ride as JVM arrays baked into the expression
-  * (dimension-sized driver state, the [[NearestSeed]]/[[PqEncode]]
+  * (dimension-sized index state, the [[NearestSeed]]/[[PqEncode]]
   * broadcast pattern); probes therefore stay a DataFrame at ANY
-  * cardinality — this is what removes the probe-side collect that caps
-  * the serving-style `topK` at driver memory.
+  * cardinality, and no query collects them to the driver.
   */
 case class PqAdcTable(left: Expression, right: Expression,
                       centers: Array[Array[Double]],
@@ -93,7 +91,7 @@ case class PqAdcTable(left: Expression, right: Expression,
   * vector's packed per-subspace codes, the approximate distance is
   * `Σ_s table[s*k + codes[s]]` — m array reads and adds per candidate
   * pair, raw corpus floats never touched (the FAISS ADC contract). Sum
-  * order is subspace-ascending, the same order the driver-side `topK`'s
+  * order is subspace-ascending, the same order `rankedCandidates`'
   * groupBy-sum sees its m rows in all-but-guaranteed; callers round to 6
   * decimals before ranking, which absorbs the associativity slack (the
   * shuffle-sum tie-determinism rule).

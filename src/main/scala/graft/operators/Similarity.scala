@@ -117,11 +117,12 @@ object Similarity {
     Array.fill(nPlanes)(Array.fill(dim)(next()))
   }
 
-  /** Sign-random-projection bucket id: one bit per hyperplane. */
+  /** Sign-random-projection bucket id: one bit per hyperplane, each
+    * hyperplane one array literal in the plan.
+    */
   def lshBucket(vec: Column, planes: Array[Array[Double]]): Column = {
     val bits = planes.zipWithIndex.map { case (p, i) =>
-      val planeCol = array(p.map(lit(_)): _*)
-      when(dot(vec, planeCol) > 0, lit(1L << i)).otherwise(lit(0L))
+      when(dot(vec, typedLit(p)) > 0, lit(1L << i)).otherwise(lit(0L))
     }
     bits.reduce((a, b) => a.bitwiseOR(b))
   }
@@ -334,16 +335,6 @@ object Similarity {
     loadIvf(spark, dir, idCol, vecCol)
   }
 
-  /** Per-cell scores monotone in negative squared distance:
-    * 2*c·x − ||c||² (argmax = nearest centroid).
-    */
-  private def ivfCellScores(centers: Array[Array[Double]])(vec: Column): Column =
-    array(centers.zipWithIndex.map { case (ctr, i) =>
-      val cNorm2 = ctr.map(x => x * x).sum
-      struct((dot(vec, array(ctr.map(lit(_)): _*)) * 2 - cNorm2).as("score"),
-        lit(i).as("cell"))
-    }: _*)
-
   class IvfIndex private[operators] (
       /** Corpus bucketed by nearest centroid — the inverted file. */
       val cells: DataFrame,
@@ -351,7 +342,14 @@ object Similarity {
       val centers: Array[Array[Double]],
       idCol: String, vecCol: String) {
 
-    private def cellScores(vec: Column): Column = ivfCellScores(centers)(vec)
+    /** A probe's `n` nearest cells, nearest first (the native ranker
+      * over 2·c·x − ||c||², the centroid matrix one expression
+      * parameter); ties to the HIGHER cell, the order of the
+      * reverse(array_sort(struct(score, cell))) form this index was
+      * built on.
+      */
+    private def probeCells(vec: Column, n: Int): Column =
+      org.apache.spark.sql.GraftBridge.nearestCells(vec, centers, n, tieHigh = true)
 
     /** Persist the index: the inverted file partitioned BY CELL — at scale
       * a probe's scan touches only its nProbe cell directories (partition
@@ -425,10 +423,7 @@ object Similarity {
 
     def topK(probes: DataFrame, k: Int, nProbe: Int = 4): DataFrame = {
       val p = probes.select(col(idCol).as("probe_id"), asDouble(col(vecCol)).as("_pv"))
-        .withColumn("cell",
-          explode(transform(
-            slice(reverse(array_sort(cellScores(col("_pv")))), 1, nProbe),
-            s => s.getField("cell"))))
+        .withColumn("cell", explode(probeCells(col("_pv"), nProbe)))
       val scored = cells.join(broadcast(p), Seq("cell"))
         .filter(col("probe_id") =!= col("neighbor_id"))
         .withColumn("cosine", cosine(col("_pv"), col("_cv")))
@@ -456,9 +451,7 @@ object Similarity {
       val p = probes
         .select(col(idCol).as("probe_id"), asDouble(col(vecCol)).as("_pv"))
         .select(col("probe_id"), col("_pv"), norm(col("_pv")).as("_pn"),
-          posexplode(transform(
-            slice(reverse(array_sort(cellScores(col("_pv")))), 1, maxProbe),
-            s => s.getField("cell"))).as(Seq("_pos", "cell")))
+          posexplode(probeCells(col("_pv"), maxProbe)).as(Seq("_pos", "cell")))
       // probe norm hoisted before the join (bit-identical — see
       // bruteForceTopK); the corpus norm stays inline: candidates touch
       // ~nProbe/nCells of the corpus, so a per-candidate norm is cheaper
@@ -493,7 +486,8 @@ object Similarity {
     * Scale shape: `codes` is the only corpus-sized artifact (cell id +
     * m small code ids per vector — persisted partitioned BY CELL, a
     * probe's join touches nProbe partitions); centers and codebooks are
-    * dimension-sized driver state; the query distance table is
+    * dimension-sized state that enters a query plan as parameters of
+    * native expressions; the query distance table is built in the plan,
     * probes × nProbe × m × k rows, broadcast. The residual pass is one
     * broadcast join + map (no shuffle of the corpus).
     */
@@ -556,10 +550,20 @@ object Similarity {
       val codebooks: Array[Array[Array[Double]]],
       val subDim: Int) {
 
+    /** A probe's `n` nearest cells, nearest first; ties to the LOWER
+      * cell, the ORDER BY score DESC, cell ASC the IVF-PQ oracles
+      * replicate.
+      */
+    private def probeCells(vec: Column, n: Int): Column =
+      org.apache.spark.sql.GraftBridge.nearestCells(vec, centers, n, tieHigh = false)
+
     /** Approximate top-k per probe over the nProbe nearest cells:
       * (probe_id, neighbor_id, approx_dist, rank). approx_dist is the
       * rounded ADC residual distance (comparable within a probe; smaller
-      * is nearer); ties break by neighbor id.
+      * is nearer); ties break by neighbor id. Self-pairs are kept (the
+      * serving shape). Building the plan runs no Spark job: probes stay a
+      * DataFrame, and their distance table is built in the plan
+      * ([[rankedCandidates]]) and broadcast.
       */
     def topK(probes: DataFrame, kNN: Int, nProbe: Int = 2,
              probeIdCol: String = "vec_id",
@@ -585,40 +589,23 @@ object Similarity {
     def rankedCandidates(probes: DataFrame, maxProbe: Int,
                          probeIdCol: String = "vec_id",
                          probeVecCol: String = "embedding"): DataFrame = {
-      val spark = codes.sparkSession
-      import spark.implicits._
-      val pv = probes.select(col(probeIdCol).cast("long").as("probe_id"),
-          transform(col(probeVecCol), x => x.cast("double")).as("_p"))
-        .collect().map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
-      val table = for {
-        (pid, p) <- pv.toSeq
-        // cell ranking mirrors assignment: max 2·c·p − ||c||², ties to
-        // the smaller index
-        (cell, cellRank) <- centers.indices
-          .map(i => (centers(i).zipWithIndex.map { case (x, j) =>
-            2 * x * (if (j < p.length) p(j) else 0.0) }.sum
-            - centers(i).map(x => x * x).sum, i))
-          .sortBy { case (score, i) => (-score, i) }
-          .take(maxProbe).zipWithIndex
-          .map { case ((_, c), r0) => (c, r0 + 1) }
-        s <- codebooks.indices
-        (ctr, code) <- codebooks(s).zipWithIndex
-      } yield {
-        val center = centers(cell)
-        var dist = 0.0
-        var j = 0
-        while (j < ctr.length) {
-          val off = s * subDim + j
-          val r = (if (off < p.length) p(off) else 0.0) -
-            (if (off < center.length) center(off) else 0.0)
-          val diff = r - ctr(j)
-          dist += diff * diff
-          j += 1
-        }
-        (pid, cell, cellRank, s, code, dist)
-      }
-      val t = broadcast(table.toDF(
-        "probe_id", "cell", "cell_rank", "subspace", "code", "pd"))
+      val kC = codebooks.head.length
+      // the distance table, built in the plan next to the probes:
+      // probe -> its ranked cells -> one m×k ADC table per (probe, cell)
+      // -> one row per table entry, entry s*k + c being (subspace s,
+      // code c). probes × maxProbe × m × k rows, broadcast.
+      val t = broadcast(probes
+        .select(col(probeIdCol).cast("long").as("probe_id"),
+          asDouble(col(probeVecCol)).as("_p"))
+        .select(col("probe_id"), col("_p"),
+          posexplode(probeCells(col("_p"), maxProbe)).as(Seq("_pos", "cell")))
+        .select(col("probe_id"), col("cell"),
+          (col("_pos") + 1).as("cell_rank"),
+          posexplode(org.apache.spark.sql.GraftBridge.pqAdcTable(
+            col("_p"), col("cell"), centers, codebooks, subDim)).as(Seq("_e", "pd")))
+        .select(col("probe_id"), col("cell"), col("cell_rank"),
+          (col("_e") / kC).cast("int").as("subspace"),
+          (col("_e") % kC).as("code"), col("pd")))
       // rounded before ranking — the shuffle-sum tie-determinism rule
       codes.join(t, Seq("cell", "subspace", "code"))
         .groupBy(col("probe_id"), col("neighbor_id"))
@@ -641,12 +628,13 @@ object Similarity {
         e => e.getField("code")).as("_codes"))
 
     /** Distributed corpus×corpus ADC top-k: probes STAY a DataFrame at
-      * any cardinality — no driver collect, no broadcast cap. This is
-      * the batch-analytics complement of [[topK]] (whose driver-side
-      * table build is the right shape only for serving-style point
-      * lookups): per probe, the nProbe nearest cells expand map-side
-      * (the [[Similarity.ivfCellScores]] score 2·c·p − ||c||², ties to
-      * the smaller cell — the oracle's ORDER BY score DESC, cell ASC),
+      * any cardinality, and nothing of theirs is broadcast. This is the
+      * batch-analytics complement of [[topK]] (whose broadcast
+      * per-entry distance table is the right shape only for
+      * serving-style probe sets): per probe, the nProbe nearest cells
+      * expand map-side (the [[graft.functions.NearestCells]] score
+      * 2·c·p − ||c||², ties to the smaller cell — the oracle's ORDER BY
+      * score DESC, cell ASC),
       * the per-(probe, cell) m×k distance table is built EXECUTOR-SIDE
       * by the native [[graft.functions.PqAdcTable]] (centers/codebooks
       * ride inside the expression as dimension-sized state), candidates
@@ -669,19 +657,10 @@ object Similarity {
                  salts: Int = 8): DataFrame = {
       require(salts >= 1 && nProbe >= 1)
       val kC = codebooks.head.length
-      val cellRank = {
-        val entries = centers.zipWithIndex.map { case (ctr, i) =>
-          val n2 = ctr.map(x => x * x).sum
-          struct((-(dot(col("_p"), array(ctr.map(lit(_)): _*)) * 2 - n2)).as("ns"),
-            lit(i).as("cell"))
-        }
-        transform(slice(array_sort(array(entries: _*)), 1, nProbe),
-          s => s.getField("cell"))
-      }
       val p = spread(probes)
         .select(col(probeIdCol).cast("long").as("probe_id"),
           asDouble(col(probeVecCol)).as("_p"))
-        .withColumn("cell", explode(cellRank))
+        .withColumn("cell", explode(probeCells(col("_p"), nProbe)))
         .withColumn("_tbl", org.apache.spark.sql.GraftBridge.pqAdcTable(
           col("_p"), col("cell"), centers, codebooks, subDim))
         .select(col("probe_id"), col("cell"), col("_tbl"))

@@ -29,6 +29,14 @@ object GraftBridge {
     ExpressionUtils.column(graft.functions.NearestCenter(
       ExpressionUtils.expression(vec), centers, tieHigh))
 
+  /** Column of a vector's top-n cell ids in rank order (see
+    * graft.functions.NearestCells).
+    */
+  def nearestCells(vec: Column, centers: Array[Array[Double]], n: Int,
+                   tieHigh: Boolean): Column =
+    ExpressionUtils.column(graft.functions.NearestCells(
+      ExpressionUtils.expression(vec), centers, n, tieHigh))
+
   /** Column over the fused product-quantization encoder
     * (array of struct(subspace, code, dist)).
     */

@@ -1059,6 +1059,26 @@ class OperatorsSpec extends SparkSpec {
     assert(recall >= 0.5, s"recall $recall") // hamming<=1 fanout on 8 planes
   }
 
+  test("lshBucket with one array literal per hyperplane equals the per-element literal form") {
+    val emb = graft.core.Tables.embeddings(spark, "/root/testdata/sf0.001")
+      .select(col("vec_id"), transform(col("embedding"), _.cast("double")).as("v"))
+    // the per-element form: each hyperplane spelled as `dim` lit nodes
+    def perElement(vec: org.apache.spark.sql.Column, planes: Array[Array[Double]]) =
+      planes.zipWithIndex.map { case (p, i) =>
+        when(Similarity.dot(vec, array(p.map(lit(_)): _*)) > 0, lit(1L << i))
+          .otherwise(lit(0L))
+      }.reduce((a, b) => a.bitwiseOR(b))
+    Seq(7L, 138L, 269L).foreach { seed =>
+      val planes = Similarity.hyperplanes(8, 64, seed)
+      val got = emb.select(col("vec_id"), Similarity.lshBucket(col("v"), planes))
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val exp = emb.select(col("vec_id"), perElement(col("v"), planes))
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(got.nonEmpty && got === exp, s"seed $seed")
+      assert(got.values.toSet.size > 1, s"seed $seed: buckets degenerate")
+    }
+  }
+
   test("autoCells follows the sqrt-n IVF sizing rule with floor, cap, and k<=n") {
     // the 100x contract: fixed cells make corpus-x-corpus ADC quadratic
     // in n; sqrt scaling keeps the per-probe candidate share flat
@@ -1856,6 +1876,93 @@ class OperatorsSpec extends SparkSpec {
       assert(got === exp)
     } finally spark.sparkContext.removeSparkListener(listener)
     idx.codes.unpersist()
+  }
+
+  test("IVF-PQ rankedCandidates and topK build no driver-side data: zero jobs, no local table, rows equal the driver ADC loop") {
+    val emb = graft.core.Tables.embeddings(spark, "/root/testdata/sf0.001")
+    val probes = emb.filter(col("vec_id") < 20)
+    val idx = Similarity.buildIvfPq(emb, 8, 8, 16)
+    // the oracle: the distance table built on the driver from collected
+    // probes (cells ranked by 2·c·p − ||c||², ties to the smaller cell),
+    // passed to Spark as a local relation and joined to the codes
+    def driverLoop(maxProbe: Int): org.apache.spark.sql.DataFrame = {
+      val s = spark
+      import s.implicits._
+      val centers = idx.centers; val codebooks = idx.codebooks; val subDim = idx.subDim
+      val pv = probes.select(col("vec_id").cast("long").as("probe_id"),
+          transform(col("embedding"), x => x.cast("double")).as("_p"))
+        .collect().map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
+      val table = for {
+        (pid, p) <- pv.toSeq
+        (cell, cellRank) <- centers.indices
+          .map(i => (centers(i).zipWithIndex.map { case (x, j) =>
+            2 * x * (if (j < p.length) p(j) else 0.0) }.sum
+            - centers(i).map(x => x * x).sum, i))
+          .sortBy { case (score, i) => (-score, i) }
+          .take(maxProbe).zipWithIndex
+          .map { case ((_, c), r0) => (c, r0 + 1) }
+        sub <- codebooks.indices
+        (ctr, code) <- codebooks(sub).zipWithIndex
+      } yield {
+        val center = centers(cell)
+        var dist = 0.0
+        var j = 0
+        while (j < ctr.length) {
+          val off = sub * subDim + j
+          val r = (if (off < p.length) p(off) else 0.0) -
+            (if (off < center.length) center(off) else 0.0)
+          val diff = r - ctr(j)
+          dist += diff * diff
+          j += 1
+        }
+        (pid, cell, cellRank, sub, code, dist)
+      }
+      val t = broadcast(table.toDF(
+        "probe_id", "cell", "cell_rank", "subspace", "code", "pd"))
+      idx.codes.join(t, Seq("cell", "subspace", "code"))
+        .groupBy(col("probe_id"), col("neighbor_id"))
+        .agg(round(sum(col("pd")), 6).as("approx_dist"),
+          min(col("cell_rank")).as("cell_rank"))
+    }
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => (r.getAs[Long]("probe_id"), r.getAs[Long]("neighbor_id"),
+        r.getAs[Double]("approx_dist"), r.getAs[Int]("cell_rank"))).toSet
+    val jobs = new java.util.concurrent.atomic.AtomicLong
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    // the query's own operators, through AQE stages and subqueries;
+    // the cached index's build plan (its centers table) is not walked
+    val aqe = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+    def localScans(df: org.apache.spark.sql.DataFrame) =
+      aqe.collectWithSubqueries(df.queryExecution.executedPlan) {
+        case l: org.apache.spark.sql.execution.LocalTableScanExec => l
+      }
+    try {
+      Seq(1, 4).foreach { maxProbe =>
+        val oracle = driverLoop(maxProbe)
+        val exp = rows(oracle)
+        assert(localScans(oracle).nonEmpty, "the walker must see the oracle's local table")
+        spark.sparkContext.addSparkListener(listener)
+        val (cand, top) = try {
+          org.apache.spark.sql.GraftBridge.drainListenerBus(spark)
+          val j0 = jobs.get
+          val built = (idx.rankedCandidates(probes, maxProbe),
+            idx.topK(probes, 5, nProbe = maxProbe))
+          org.apache.spark.sql.GraftBridge.drainListenerBus(spark)
+          assert(jobs.get === j0,
+            s"maxProbe=$maxProbe: building the plans ran Spark jobs — a probe collect snuck in")
+          built
+        } finally spark.sparkContext.removeSparkListener(listener)
+        assert(rows(cand) === exp, s"maxProbe=$maxProbe")
+        top.collect()
+        Seq(cand, top).foreach { df =>
+          assert(localScans(df).isEmpty, s"maxProbe=$maxProbe: a driver-built table " +
+            s"reached the plan:\n${df.queryExecution.executedPlan}")
+        }
+      }
+    } finally idx.codes.unpersist()
   }
 
   // ------------------------------------------------------- semantic dedup

@@ -954,7 +954,7 @@ class ScaleTechniquesSpec extends SparkSpec {
   }
 
   test("NearestCenter tieHigh assignment is bit-identical to the composable array_max form, including exact score ties") {
-    // the composable ivfCellScores chain: array_max over
+    // the composable cell-score chain: array_max over
     // struct(2·c·x − ||c||², cell) with Similarity.dot's sequential fold
     def dotC(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
       aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, x) => acc + x)
@@ -1013,6 +1013,57 @@ class ScaleTechniquesSpec extends SparkSpec {
       org.apache.spark.sql.GraftBridge.nearestCenter(col("v"), centers)
         .getField("cell"))
     assert(nanLow.filter(col("cell") =!= 0).isEmpty, "default NaN tie rule")
+  }
+
+  test("NearestCells ranks cells exactly as the composable array_sort(struct(score, cell)) form, in both tie directions") {
+    def dotC(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
+      aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, x) => acc + x)
+    val emb = graft.core.Tables.embeddings(spark, "/root/testdata/sf0.001")
+      .select(col("vec_id"), transform(col("embedding"), _.cast("double")).as("v"))
+    val some = emb.orderBy("vec_id").limit(7).collect()
+      .map(_.getSeq[Double](1).toArray)
+    // DUPLICATED centers: every cell ties with its copy 7 cells up
+    val centers = some ++ some
+    // one NaN-poisoned vector (in place, same length): every score NaN,
+    // so every cell ties
+    val vecs = emb.unionByName(emb.orderBy("vec_id").limit(1)
+      .select(lit(-1L).as("vec_id"),
+        transform(col("v"), (x, i) => when(i === 0, lit(Double.NaN)).otherwise(x)).as("v")))
+    def scored(cellKey: Int => Int) = array(centers.zipWithIndex.map { case (ctr, i) =>
+      val n2 = ctr.map(x => x * x).sum
+      struct((dotC(col("v"), array(ctr.map(lit(_)): _*)) * 2 - n2).as("score"),
+        lit(cellKey(i)).as("cell"))
+    }: _*)
+    def ranked(df: org.apache.spark.sql.DataFrame, c: org.apache.spark.sql.Column) =
+      df.select(col("vec_id"), c.as("cells")).collect()
+        .map(r => r.getLong(0) -> r.getSeq[Int](1)).toMap
+    Seq(1, 3, 20).foreach { n =>
+      // tieHigh: score desc, then the HIGHER cell — the IVF-flat order
+      val high = ranked(vecs, transform(slice(reverse(array_sort(scored(identity))), 1, n),
+        e => e.getField("cell")))
+      // default: score desc, then the LOWER cell (cell negated in the key)
+      val low = ranked(vecs, transform(slice(reverse(array_sort(scored(i => -i))), 1, n),
+        e => -e.getField("cell")))
+      val nativeHigh = ranked(vecs,
+        org.apache.spark.sql.GraftBridge.nearestCells(col("v"), centers, n, tieHigh = true))
+      val nativeLow = ranked(vecs,
+        org.apache.spark.sql.GraftBridge.nearestCells(col("v"), centers, n, tieHigh = false))
+      assert(nativeHigh === high, s"tieHigh n=$n")
+      assert(nativeLow === low, s"tie-low n=$n")
+      assert(nativeHigh.values.forall(_.length == math.min(n, centers.length)), s"n=$n length")
+      // the tie rule engaged: the best cell is the copy (>= 7) under
+      // tieHigh and the original (< 7) otherwise; the NaN row ranks
+      // every cell equal, so its order is the cell order alone
+      assert(nativeHigh.forall { case (id, cs) => id == -1L || cs.head >= 7 }, s"tieHigh n=$n")
+      assert(nativeLow.forall { case (id, cs) => id == -1L || cs.head < 7 }, s"tie-low n=$n")
+      assert(nativeHigh(-1L) === (centers.length - 1 to 0 by -1).take(n), s"NaN tieHigh n=$n")
+      assert(nativeLow(-1L) === centers.indices.take(n), s"NaN tie-low n=$n")
+    }
+    // n = 1, tieHigh is the nearest-center assignment
+    val assigned = ranked(vecs, array(org.apache.spark.sql.GraftBridge.nearestCenter(
+      col("v"), centers, tieHigh = true).getField("cell")))
+    assert(ranked(vecs, org.apache.spark.sql.GraftBridge.nearestCells(
+      col("v"), centers, 1, tieHigh = true)) === assigned)
   }
 
   test("GraftExtensions injects its registrations into a fresh extension set") {
