@@ -91,46 +91,11 @@ class PlugRunner(
           store.commit(batchId, fn(prior, tables))
           store.prune(StateKeepLast)
         case None =>
-          // the id goes in as a string literal, which generated code holds
-          // as a reference; an int or long literal is written into the code
-          // itself, so every batch would compile new classes. The directory
-          // is `_batch_id=<id>` either way.
-          val withBatch = df.withColumn("_batch_id", lit(batchId.toString))
-          val (partCols, out) =
-            if (df.columns.contains("block_num"))
-              (Seq("_batch_id", "_block_bucket"),
-                withBatch.withColumn("_block_bucket",
-                  expr(s"CAST(block_num DIV $BlockBucketSize AS INT)")))
-            else (Seq("_batch_id"), withBatch)
-          out.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(partCols: _*)
-            .parquet(tableDir(name))
-          // manifest commit: record the batch id in the one-file commit
-          // record (idempotent — a replayed id is already a member). The
-          // data write lands first, so a crash between the two replays
-          // the batch (offsets commit after processBatch) and re-runs
-          // both steps. An EMPTY batch writes no partition directory at
-          // all (dynamic overwrite of zero rows), so membership is
-          // gated on the directory existing — recording a dir-less id
-          // would point readers at a nonexistent path.
-          val bDir = new org.apache.hadoop.fs.Path(
-            tableDir(name), s"_batch_id=$batchId")
-          val bFs = bDir.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
-          val read = manifest(df.sparkSession, name)
-          val m =
-            if (!bFs.exists(bDir)) read
-            else {
-              val added = read.copy(live = (read.live.toSet + batchId).toSeq.sorted)
-              writeManifest(df.sparkSession, name, added)
-              added
-            }
-          // keep the directory count bounded: once enough per-batch
-          // partitions accumulate, fold everything before this batch into
-          // a compact segment (ids < batchId are past their replay window
-          // — their source offsets committed before this batch started)
-          if (CompactEvery > 0 && m.live.size >= CompactEvery)
-            compactAppends(df.sparkSession, name, batchId - 1)
+          val out =
+            if (!df.columns.contains("block_num")) df
+            else df.withColumn(AppendStore.BucketCol,
+              expr(s"CAST(block_num DIV $BlockBucketSize AS INT)"))
+          appendStore(df.sparkSession, name).append(batchId, Seq(out))
       }
     }
     // engine metadata (hpp.plug_state equivalent, §1.1-B): cursor + check-in
@@ -233,288 +198,56 @@ class PlugRunner(
       .start()
   }
 
-  /** Auto-compaction threshold for append tables: once this many live
-    * `_batch_id=` partitions accumulate, [[processBatch]] folds them into
-    * a segment. 0 disables. The point is bounded directory counts: a
-    * year of minutely batches is ~500k directories, and every planner
-    * listing pays for all of them; with folding it's
-    * `CompactEvery + batches/CompactEvery` segment dirs.
+  /** Fold threshold for append tables (see [[AppendStore.CompactEvery]]);
+    * a table's directory count stays under `CompactEvery +
+    * MergeSegmentsAt + 1`. 0 disables.
     */
-  val CompactEvery: Int = 64
+  val CompactEvery: Int = AppendStore.CompactEvery
 
-  /** Segment-tier roll-up threshold: incremental folds still accumulate
-    * one `_compact/v=` dir per [[CompactEvery]] batches forever (the
-    * same unbounded-directory class, one level up — ~450 new segment
-    * dirs/day at production block rates). Once this many segments are
-    * committed they merge into ONE cumulative `_compact/m=<W>` dir
-    * holding every batch `<= W`; the manifest's `merged` field commits
-    * the swap atomically. The merge rewrites the table, amortized to
-    * once per `MergeSegmentsAt * CompactEvery` batches — the LSM trade
-    * that keeps the table's directory count bounded by
-    * `MergeSegmentsAt + CompactEvery + 1` for the stream's lifetime.
-    * 0 disables.
+  /** Merge threshold for append tables' folds (see
+    * [[AppendStore.MergeSegmentsAt]]). 0 disables.
     */
-  val MergeSegmentsAt: Int = 8
+  val MergeSegmentsAt: Int = AppendStore.MergeSegmentsAt
 
-  private def appendStore(spark: SparkSession, name: String) =
-    new ParquetStateStore(spark, s"${tableDir(name)}/_compact")
-
-  /** The cumulative-merge dirs (`_compact/m=<W>`) as a store — the same
-    * committed-version listing protocol as the segment tier, reused via
-    * [[ParquetStateStore]]'s prefix parameter rather than re-implemented.
-    * Only the manifest's `merged` entry is live data; other committed
-    * dirs are strays a crashed merge left for GC.
+  /** Each append table's store, made on first use; it keeps the table's
+    * manifest in memory, so a batch or a read of [[table]] opens no file.
     */
-  private def mergedStore(spark: SparkSession, name: String) =
-    new ParquetStateStore(spark, s"${tableDir(name)}/_compact", "m=")
+  private val appendStores =
+    new java.util.concurrent.ConcurrentHashMap[String, AppendStore]()
 
-  /** The append table's one-file commit record: which segment watermarks
-    * and which live batch ids are committed. Readers and the compaction
-    * trigger consult THIS, not a directory listing — at object-store
-    * scale LIST is the slow (and on some stores eventually-consistent)
-    * operation, and a 500k-batch year of `_batch_id=` history would pay
-    * it on every plan. One `open` + `rename` pair per commit instead.
-    *
-    * Format: a single line `2|m|w1,w2|b1,b2,b3` (version | cumulative
-    * merged watermark or empty | ascending segment watermarks | ascending
-    * live batch ids), swapped into place by write-tmp-then-rename — the
-    * same commit primitive Spark's own HDFSMetadataLog uses (atomic on
-    * HDFS/local; object-store deployments point checkpoints at a
-    * rename-capable store for the same reason). Version-1 records
-    * (`1|segs|live`, pre-merge-tier) parse with `merged = None`.
-    */
-  private[streaming] case class AppendManifest(segments: Seq[Long], live: Seq[Long],
-                                               merged: Option[Long] = None)
+  private def appendStore(spark: SparkSession, name: String): AppendStore =
+    appendStores.computeIfAbsent(name,
+      _ => new AppendStore(spark, tableDir(name), compactEvery = CompactEvery,
+        mergeAt = MergeSegmentsAt))
 
-  private def manifestPath(name: String) =
-    new org.apache.hadoop.fs.Path(tableDir(name), "_append_manifest")
-
-  /** Each append table's manifest as this runner last read or wrote it.
-    * The runner is its tables' one writer, so after the first read the
-    * copy [[writeManifest]] keeps is the file's content, and a batch or a
-    * read of [[table]] opens no file. [[truncateFromBatch]] reads the file
-    * again, as a fresh runner (a restart) does.
-    */
-  private val manifests =
-    new java.util.concurrent.ConcurrentHashMap[String, AppendManifest]()
-
-  private[streaming] def manifest(spark: SparkSession, name: String): AppendManifest =
-    manifests.computeIfAbsent(name, _ => readManifest(spark, name))
-
-  /** Read the manifest; if absent (pre-manifest layout, or first write),
-    * derive it from a one-time directory listing — the migration path
-    * for tables written before the manifest existed.
-    */
-  private def readManifest(spark: SparkSession, name: String): AppendManifest = {
-    val path = manifestPath(name)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val parsed =
-      if (!fs.exists(path)) None
-      else {
-        val in = fs.open(path)
-        val raw = try scala.io.Source.fromInputStream(in).mkString finally in.close()
-        // tolerate a torn write (crash mid-create should be impossible
-        // under rename, but a corrupt record must re-derive, not brick)
-        def ids(s: String): Option[Seq[Long]] =
-          if (s.isEmpty) Some(Nil)
-          else {
-            val parts = s.split(",").toSeq.map(_.toLongOption)
-            if (parts.forall(_.isDefined)) Some(parts.flatten) else None
-          }
-        raw.trim.split("\\|", -1) match {
-          case Array("1", segs, live) =>
-            for (s <- ids(segs); l <- ids(live)) yield AppendManifest(s, l)
-          case Array("2", merged, segs, live) =>
-            for {
-              m <- if (merged.isEmpty) Some(None)
-                   else merged.toLongOption.map(Some(_))
-              s <- ids(segs); l <- ids(live)
-            } yield AppendManifest(s, l, m)
-          case _ => None
-        }
-      }
-    parsed.getOrElse {
-      // pre-manifest (or deleted-manifest) derivation from one listing:
-      // the highest committed merge supersedes everything at or below it
-      val merged = mergedStore(spark, name).latestVersion
-      val mw = merged.getOrElse(-1L)
-      AppendManifest(
-        appendStore(spark, name).allVersions.filter(_ > mw),
-        listBatchIds(spark, name), merged)
-    }
-  }
-
-  private[streaming] def writeManifest(spark: SparkSession, name: String,
-                                       m: AppendManifest): Unit = {
-    val path = manifestPath(name)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new org.apache.hadoop.fs.Path(tableDir(name), "._append_manifest.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(
-      s"2|${m.merged.map(_.toString).getOrElse("")}|${m.segments.mkString(",")}|${m.live.mkString(",")}"
-        .getBytes("UTF-8"))
-    finally out.close()
-    fs.delete(path, false)
-    fs.rename(tmp, path)
-    manifests.put(name, m)
-  }
-
-  /** Batch-id partitions currently on disk for an append table — the
-    * manifest-derivation fallback only; committed membership is the
-    * manifest's.
-    */
-  private def listBatchIds(spark: SparkSession, name: String): Seq[Long] = {
-    val root = new org.apache.hadoop.fs.Path(tableDir(name))
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) Seq.empty
-    else fs.listStatus(root).toSeq
-      .filter(_.isDirectory).map(_.getPath.getName)
-      .filter(_.startsWith("_batch_id="))
-      .map(_.stripPrefix("_batch_id=").toLong).sorted
-  }
-
-  /** Fold append batches `<= upToBatch` into one compact segment — the
-    * manifest-commit answer to per-batch partition sprawl (NOTES: the
-    * batch-id overwrite sink is "correct but directory-heavy at high
-    * batch counts").
-    *
-    * Protocol: a segment `_compact/v=W` holds every batch in
-    * `(prevW, W]`; the version number IS the fold watermark, committed
-    * atomically by the parquet `_SUCCESS` marker. Readers take all
-    * segments plus only batch dirs `> maxW`, so the deletion of folded
-    * dirs afterwards is pure GC — a crash between commit and delete
-    * leaves stale dirs that every reader already excludes, and a replayed
-    * backfill chunk that re-materializes a folded id is excluded the same
-    * way. Folding is incremental (each segment reads only its own
-    * batches, never prior segments), so compaction cost is O(new data).
-    *
-    * Only call with `upToBatch` strictly below any batch id that may
-    * still replay; [[processBatch]]'s auto-trigger uses `batchId - 1`,
-    * whose source offsets committed before the current batch started.
+  /** Fold append batches `<= upToBatch` into one compact segment (see
+    * [[AppendStore.compact]]). Only call with `upToBatch` strictly below
+    * any batch id that may still replay; [[processBatch]]'s auto-trigger
+    * uses `batchId - 1`, whose source offsets committed before the current
+    * batch started.
     */
   def compactAppends(spark: SparkSession, name: String, upToBatch: Long): Unit = {
     require(!mergeFns.contains(name),
       s"$name is a merge table; its state store already compacts via prune")
-    val store = appendStore(spark, name)
-    val m = manifest(spark, name)
-    // the MANIFEST decides progress, not the segment listing: a crash
-    // between segment commit and manifest swap leaves a committed-but-
-    // unreferenced segment, and the re-trigger must re-fold (idempotent
-    // overwrite of the same version) rather than skip and strand the
-    // manifest behind the segment store forever
-    val prevW = math.max(m.merged.getOrElse(-1L),
-      m.segments.lastOption.getOrElse(-1L))
-    if (upToBatch <= prevW) return
-    val foldable = m.live.filter(n => n > prevW && n <= upToBatch)
-    if (foldable.isEmpty) return
-    val dir = tableDir(name)
-    val seg = spark.read.option("basePath", dir)
-      .parquet(foldable.map(n => s"$dir/_batch_id=$n"): _*)
-      .withColumn("_batch_id", col("_batch_id").cast("long"))
-    val partCols = if (seg.columns.contains("_block_bucket")) Seq("_block_bucket") else Nil
-    store.commit(upToBatch, seg, partCols)
-    // everything <= the new watermark leaves the live set: the foldable
-    // ids just landed in the segment, and any OTHER live id below the
-    // watermark is a replayed-folded stray whose data a segment already
-    // holds (readers were excluding it by the watermark rule; now its
-    // dir gets GC'd too)
-    val newLive = m.live.filter(_ > upToBatch)
-    val folded = m.copy(
-      segments = (m.segments :+ upToBatch).distinct.sorted, live = newLive)
-    writeManifest(spark, name, folded)
-    // GC last — everything below runs after the new manifest is visible,
-    // so a crash anywhere here leaves only dirs every reader already
-    // excludes. The listing (one per compaction, not per read) also
-    // sweeps strays a previous crash-between-swap-and-GC left behind.
-    val root = new org.apache.hadoop.fs.Path(dir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    listBatchIds(spark, name)
-      .filter(n => n <= upToBatch && !newLive.contains(n))
-      .foreach(n =>
-        fs.delete(new org.apache.hadoop.fs.Path(root, s"_batch_id=$n"), true))
-    // the manifest just written is passed through — no re-read of the
-    // file this method wrote moments ago
-    mergeAppendSegments(spark, name, folded)
+    appendStore(spark, name).compact(upToBatch)
   }
 
-  /** The SEGMENT-tier roll-up (see [[MergeSegmentsAt]]): once the
-    * manifest lists enough incremental segments, rewrite (current merged
-    * segment, if any) + all listed segments into one cumulative
-    * `_compact/m=<maxW>` dir holding every batch `<= maxW`. Commit order
-    * mirrors [[compactAppends]]: data first (parquet `_SUCCESS`), the
-    * manifest swap is THE commit (merged=maxW, segments emptied), GC of
-    * the superseded inputs strictly last — a crash at any point leaves
-    * either the old manifest (stray m-dir ignored, idempotently
-    * overwritten on re-trigger) or the new one (leftover v-dirs/old
-    * m-dirs are ignored strays the next merge's GC sweeps).
-    */
-  private def mergeAppendSegments(spark: SparkSession, name: String,
-                                  m: AppendManifest): Unit = {
-    if (MergeSegmentsAt <= 0 || m.segments.size < MergeSegmentsAt) return
-    val dir = tableDir(name)
-    val maxW = m.segments.max
-    val inputs =
-      m.merged.map(w => s"$dir/_compact/m=$w").toSeq ++
-        m.segments.map(w => s"$dir/_compact/v=$w")
-    // per-dir reads + unionByName (NOT one multi-path read: segments may
-    // be partitioned by _block_bucket, and multi-root partition
-    // discovery needs a common base these dirs don't share)
-    val all = inputs.map(spark.read.parquet(_)).reduce(_.unionByName(_))
-    val partCols =
-      if (all.columns.contains("_block_bucket")) Seq("_block_bucket") else Nil
-    val w = all.write.mode("overwrite")
-    (if (partCols.nonEmpty) w.partitionBy(partCols: _*) else w)
-      .parquet(s"$dir/_compact/m=$maxW")
-    writeManifest(spark, name,
-      AppendManifest(Nil, m.live.filter(_ > maxW), Some(maxW)))
-    // GC strictly last, COMMITTED OR NOT: an uncommitted m=/v= dir below
-    // the watermark is a dead partial write from an earlier crash (the
-    // fold/merge path is single-threaded per runner, so it can never be
-    // a concurrent writer), and a committed one is a superseded stray —
-    // every reader already takes merged=maxW from the manifest. Sweeping
-    // only committed dirs would leak a near-table-sized partial per
-    // crash, breaking the lifetime directory bound this tier exists for.
-    mergedStore(spark, name).deleteUpTo(maxW, inclusive = false)
-    appendStore(spark, name).deleteUpTo(maxW, inclusive = true)
-  }
-
-  /** Read the current contents of a derived table. Append tables are the
-    * union of the manifest's compact segments and its live batch
-    * partitions above the fold watermark (see [[compactAppends]] for why
-    * manifest membership, not directory presence, decides — a replayed
-    * backfill chunk can re-materialize a folded id's directory, and a
-    * crashed compaction can leave folded dirs behind; both are excluded
-    * here without any listing).
+  /** Read the current contents of a derived table. An append table is the
+    * union of what its manifest commits: the merged and folded segments and
+    * the live batch partitions above their watermark. A replayed backfill
+    * chunk can re-materialize a folded id's directory, and a crashed
+    * compaction can leave folded directories behind; the manifest excludes
+    * both without a listing.
     */
   def table(spark: SparkSession, name: String): DataFrame =
     if (mergeFns.contains(name))
       new ParquetStateStore(spark, tableDir(name)).read()
         .getOrElse(spark.emptyDataFrame)
-    else {
-      val dir = tableDir(name)
-      val m = manifest(spark, name)
-      if (m.segments.isEmpty && m.live.isEmpty && m.merged.isEmpty)
-        // nothing committed (or a pre-manifest dir with nothing listable):
-        // let the plain read surface its own empty-path semantics
-        spark.read.parquet(dir).drop("_batch_id", "_block_bucket")
-      else {
-        val mw = m.merged.getOrElse(-1L)
-        val maxW = math.max(mw, m.segments.lastOption.getOrElse(-1L))
-        val mergedFrames = m.merged.toSeq.map(w =>
-          spark.read.parquet(s"$dir/_compact/m=$w")
-            .drop("_batch_id", "_block_bucket"))
-        val segFrames = m.segments.filter(_ > mw).map(w =>
-          spark.read.parquet(s"$dir/_compact/v=$w")
-            .drop("_batch_id", "_block_bucket"))
-        val live = m.live.filter(_ > maxW)
-        val liveFrames =
-          if (live.isEmpty) Nil
-          else Seq(spark.read.option("basePath", dir)
-            .parquet(live.map(n => s"$dir/_batch_id=$n"): _*)
-            .drop("_batch_id", "_block_bucket"))
-        (mergedFrames ++ segFrames ++ liveFrames).reduce(_.unionByName(_))
-      }
-    }
+    else
+      appendStore(spark, name).read().map(_.head).getOrElse(
+        // nothing committed: let the plain read surface its own
+        // empty-path semantics
+        spark.read.parquet(tableDir(name)).drop(AppendStore.BatchCol, AppendStore.BucketCol))
 
   /** Fork recovery — truncate-and-replay from the fork point (T7 hard
     * path). The irreversibility watermark ([[graft.core.OpLog
@@ -531,61 +264,34 @@ class PlugRunner(
     * check-ins, so replay resumes exactly at the fork point and a fresh
     * build over the corrected chain is reproduced (pinned by spec).
     *
-    * Bounds (enforced loudly, both by the depth the retention knobs
-    * allow): append tables must not have folded `>= fromBatch` batches
-    * into a compact segment (compaction lags by [[CompactEvery]], far
-    * deeper than any watermark-bounded fork), and merge tables must
-    * still retain a state version below the fork ([[StateKeepLast]]).
-    * EVERY bound is validated before ANYTHING is mutated, so a
-    * too-deep fork fails with all sinks and the cursor untouched —
-    * never a half-truncated mix. The mutation order is cursor FIRST,
-    * sinks after: once the check-ins report the pre-fork cursor, any
-    * restart replays from the fork point (overwriting leftover
-    * post-fork batch dirs idempotently), whereas the reverse order
-    * would open a crash window where the cursor is post-fork while
-    * sinks are pre-fork and a restart silently skips the truncated
-    * range. The method is idempotent — after a crash mid-truncation,
-    * re-run it to completion before restarting the stream (required
-    * for merge tables, whose fold reads the latest retained version).
+    * Append tables roll back to any depth, a fork inside a folded or
+    * merged segment included ([[AppendStore.truncateFrom]]). Merge tables
+    * must still retain a state version below the fork
+    * ([[StateKeepLast]]), and the check-in history a check-in below it:
+    * those bounds are validated before ANYTHING is mutated, so a too-deep fork fails
+    * with all sinks and the cursor untouched — never a half-truncated
+    * mix. The mutation order is cursor FIRST, sinks after: once the
+    * check-ins report the pre-fork cursor, any restart replays from the
+    * fork point (overwriting leftover post-fork batch dirs idempotently),
+    * whereas the reverse order would open a crash window where the cursor
+    * is post-fork while sinks are pre-fork and a restart silently skips
+    * the truncated range. The method is idempotent — after a crash
+    * mid-truncation, re-run it to completion before restarting the stream
+    * (required for merge tables, whose fold reads the latest retained
+    * version).
     */
   def truncateFromBatch(spark: SparkSession, tableNames: Seq[String],
                         fromBatch: Long): Unit = {
     // phase 1 — validate every retention bound up front; no mutation
     // happens unless every table (and the cursor history) can roll back
-    val planned: Seq[(String, Either[ParquetStateStore, AppendManifest])] =
-      tableNames.map { name =>
-        if (mergeFns.contains(name)) {
-          val st = new ParquetStateStore(spark, tableDir(name))
-          st.validateTruncateFrom(fromBatch)
-          name -> Left(st)
-        } else {
-          val m = readManifest(spark, name)
-          manifests.put(name, m)
-          require((m.segments ++ m.merged).forall(_ < fromBatch),
-            s"append table $name folded batches >= $fromBatch into segments " +
-              s"(watermarks ${(m.segments ++ m.merged).mkString(",")}) — fork " +
-              "deeper than the compaction lag; rebuild the table from scratch")
-          name -> Right(m)
-        }
-      }
+    val (merged, appended) = tableNames.partition(mergeFns.contains)
+    val states = merged.map(name => new ParquetStateStore(spark, tableDir(name)))
+    states.foreach(_.validateTruncateFrom(fromBatch))
     PlugState.validateTruncateFrom(spark, outDir, plug.name, fromBatch)
     // phase 2 — cursor first (see scaladoc), then the sinks
     PlugState.truncateFrom(spark, outDir, plug.name, fromBatch)
-    planned.foreach {
-      case (_, Left(store)) => store.truncateFrom(fromBatch)
-      case (name, Right(m)) =>
-        val keep = m.live.filter(_ < fromBatch)
-        if (keep.size != m.live.size) {
-          // manifest first: readers exclude the doomed ids the instant it
-          // swaps; the dir deletes after are pure GC (crash-safe, same
-          // order as compactAppends)
-          writeManifest(spark, name, m.copy(live = keep))
-          val root = new org.apache.hadoop.fs.Path(tableDir(name))
-          val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          m.live.filter(_ >= fromBatch).foreach(n =>
-            fs.delete(new org.apache.hadoop.fs.Path(root, s"_batch_id=$n"), true))
-        }
-    }
+    states.foreach(_.truncateFrom(fromBatch))
+    appended.foreach(appendStore(spark, _).truncateFrom(fromBatch))
   }
 
   /** DDL-at-boot (S9; reference `database/haf.py:38-47,72-84` runs
@@ -608,15 +314,12 @@ class PlugRunner(
       if (mergeFns.contains(name))
         new ParquetStateStore(spark, tableDir(name)).read()
           .foreach(_.createOrReplaceTempView(s"${plug.name}_$name"))
-      else if ({ val m = manifest(spark, name)
-                 m.segments.nonEmpty || m.merged.nonEmpty })
-        // compacted: data lives in `_compact` segment/merged dirs the
-        // external-table path can't see (hidden dir) — register the
-        // watermark-aware union as a view, same refresh contract as the
-        // merge tables. The merged check matters on its own: right after
-        // a segment-tier merge the segments list is EMPTY while all
-        // history sits under `merged`, and the raw-location fallback
-        // would silently serve only the few live batch dirs.
+      else if (appendStore(spark, name).manifest.watermark >= 0)
+        // compacted (a fold or merge watermark is committed): data lives in
+        // `_compact` segment/merged dirs the external-table path can't see
+        // (hidden dir), and the raw-location fallback would silently serve
+        // only the few live batch dirs — register the watermark-aware
+        // union as a view, same refresh contract as the merge tables
         table(spark, name).createOrReplaceTempView(s"${plug.name}_$name")
       else {
         // nothing written yet -> schema inference would fail; register on
@@ -803,8 +506,7 @@ object PlugState {
   * (T3/T9) without requiring a transactional table format: committing
   * version N twice (failure replay) simply rewrites the same directory.
   */
-class ParquetStateStore(spark: SparkSession, dir: String,
-                        prefix: String = "v=") {
+class ParquetStateStore(spark: SparkSession, dir: String) {
   import org.apache.hadoop.fs.Path
 
   // Hadoop FS throughout, for the same reason streamOrigin is (see its
@@ -818,38 +520,16 @@ class ParquetStateStore(spark: SparkSession, dir: String,
   private def versions: Seq[Long] = {
     if (!fs.exists(root)) Seq.empty
     else fs.listStatus(root).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith(prefix))
+      .filter(s => s.isDirectory && s.getPath.getName.startsWith("v="))
       // toLongOption, not toLong: a stray non-numeric suffix (leftover
       // tool dir, editor droppings) must be ignored, not brick every
       // listing for the table's lifetime
-      .flatMap(_.getPath.getName.stripPrefix(prefix).toLongOption)
-      .filter(v => fs.exists(new Path(root, s"$prefix$v/_SUCCESS")))
+      .flatMap(_.getPath.getName.stripPrefix("v=").toLongOption)
+      .filter(v => fs.exists(new Path(root, s"v=$v/_SUCCESS")))
       .sorted
   }
 
   def latestVersion: Option[Long] = versions.lastOption
-
-  /** GC for additive (segment/merge) uses: delete EVERY dir named
-    * `<prefix><id>` with id below the bound, COMMITTED OR NOT — an
-    * uncommitted dir below an already-committed watermark is a dead
-    * partial write from a crash (the fold/merge path is single-threaded
-    * per runner, never a concurrent writer), and skipping it would leak
-    * a near-table-sized directory per crash.
-    */
-  def deleteUpTo(bound: Long, inclusive: Boolean): Unit = {
-    if (!fs.exists(root)) return
-    fs.listStatus(root).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith(prefix))
-      .flatMap(s => s.getPath.getName.stripPrefix(prefix).toLongOption
-        .map(_ -> s.getPath))
-      .filter { case (v, _) => if (inclusive) v <= bound else v < bound }
-      .foreach { case (_, p) => fs.delete(p, true) }
-  }
-
-  /** All committed versions, oldest first — for additive (segment) uses
-    * where every version is live data, not just the newest snapshot.
-    */
-  def allVersions: Seq[Long] = versions
 
   /** The newest committed version below `batchId`. Given `schema` (the
     * schema the version was written with), the read runs no
@@ -857,17 +537,14 @@ class ParquetStateStore(spark: SparkSession, dir: String,
     */
   def readBefore(batchId: Long, schema: Option[StructType] = None): Option[DataFrame] =
     versions.filter(_ < batchId).lastOption.map { v =>
-      schema.fold(spark.read)(s => spark.read.schema(s)).parquet(s"$dir/$prefix$v")
+      schema.fold(spark.read)(s => spark.read.schema(s)).parquet(s"$dir/v=$v")
     }
 
   def read(): Option[DataFrame] =
-    latestVersion.map(v => spark.read.parquet(s"$dir/$prefix$v"))
+    latestVersion.map(v => spark.read.parquet(s"$dir/v=$v"))
 
-  def commit(batchId: Long, df: DataFrame, partitionBy: Seq[String] = Nil): Unit = {
-    val w = df.write.mode("overwrite")
-    (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
-      .parquet(s"$dir/$prefix$batchId")
-  }
+  def commit(batchId: Long, df: DataFrame): Unit =
+    df.write.mode("overwrite").parquet(s"$dir/v=$batchId")
 
   /** Compaction: drop all but the newest `keepLast` committed versions
     * (old versions only exist to serve replay of *their* batch; once the
@@ -875,7 +552,7 @@ class ParquetStateStore(spark: SparkSession, dir: String,
     */
   def prune(keepLast: Int = 2): Unit =
     versions.dropRight(keepLast)
-      .foreach(v => fs.delete(new Path(root, s"$prefix$v"), true))
+      .foreach(v => fs.delete(new Path(root, s"v=$v"), true))
 
   /** Fork rollback: drop every version `>= fromBatch`, leaving the last
     * version below the fork as the live snapshot. Versions are COMPLETE
@@ -888,7 +565,7 @@ class ParquetStateStore(spark: SparkSession, dir: String,
   def truncateFrom(fromBatch: Long): Unit = {
     validateTruncateFrom(fromBatch)
     versions.filter(_ >= fromBatch)
-      .foreach(v => fs.delete(new Path(root, s"$prefix$v"), true))
+      .foreach(v => fs.delete(new Path(root, s"v=$v"), true))
   }
 
   /** The retained-window bound of [[truncateFrom]] alone, mutation-free —

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.operators.TextAnalysis
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Streaming deduplication for the ingest path: drop exact/normalized
@@ -35,30 +35,6 @@ object StreamingDedup {
       .dropDuplicatesWithinWatermark("_fp")
       .drop("_fp")
 
-  /** SemDeDup on the ingest path — a `foreachBatch` sink: each arriving
-    * micro-batch is judged against the accumulated corpus with
-    * [[graft.operators.Dedup.semanticDedupIncremental]] (the first batch
-    * with [[graft.operators.Dedup.semanticDedup]]), keep flags land in
-    * `resultDir`, and the batch's vectors (kept AND dropped — the
-    * contract judges against all prior arrivals) append to the corpus
-    * store.
-    *
-    * Similarity has no equality key, so
-    * `dropDuplicatesWithinWatermark` cannot express this; the corpus
-    * store IS the state, unbounded by design (it's the curated dataset
-    * itself, not an eviction cache).
-    *
-    * Exactly-once: both writes are per-batch-directory overwrites
-    * (`batch_id=N`), and the corpus read excludes partitions >= the
-    * current batch id — a crash-replayed batch re-judges against exactly
-    * the pre-crash corpus and overwrites its own partitions. Idempotent.
-    *
-    * With ids that grow over time (blockchain/ingest order), the seed set
-    * (the corpus's k smallest ids) freezes after the first batch, so
-    * assignment is stable across the stream and the folded result equals
-    * the one-shot batch dedup — the OperatorsSpec sequential-equivalence
-    * property.
-    */
   /** MinHash-LSH near-dup detection on the ingest path — a
     * `foreachBatch` sink over [[graft.operators.Dedup.NearDupIndex]]:
     * each arriving micro-batch is shingled/signed ONCE (one
@@ -79,32 +55,29 @@ object StreamingDedup {
     * identical band-bucket candidates) — the StreamingSpec
     * sequential-equivalence property.
     *
-    * Exactly-once: all three writes (pairs result, arrays part, buckets
-    * part) are per-batch-directory overwrites, and the corpus read lists
-    * only _SUCCESS-committed parts with batch id < the current one — a
-    * crash-replayed batch re-judges against exactly the pre-crash corpus
-    * and overwrites its own directories. Empty batches are a no-op
-    * (same guard as [[semanticBatchSink]]).
+    * Exactly-once: the corpus is one [[AppendStore]] with two parts,
+    * `arrays` and `buckets`, under `corpusDir`, so a batch commits both
+    * halves in one manifest swap. The pairs are judged against the
+    * committed batches below this one and written to `batch_id=N` under
+    * `resultDir` before the corpus commit, so a crash-replayed batch
+    * re-judges against exactly the pre-crash corpus and overwrites its own
+    * directories. A half-written batch is not in the manifest, and no read
+    * sees it. The store folds once `compactEvery` batches are live. Empty
+    * batches are a no-op (same guard as [[semanticBatchSink]]).
     */
   def nearDupBatchSink(corpusDir: String, resultDir: String,
                        textCol: String, idCol: String,
                        w: Int = 3, numPerm: Int = 128, bands: Int = 32,
                        threshold: Double = 0.8,
-                       compactEvery: Int = DefaultCompactEvery): (DataFrame, Long) => Unit =
+                       compactEvery: Int = AppendStore.CompactEvery): (DataFrame, Long) => Unit =
     (batchDf, batchId) => {
-      val spark = batchDf.sparkSession
-      val subroots = Seq(s"$corpusDir/arrays", s"$corpusDir/buckets")
       try if (!batchDf.isEmpty) {
+        val store = nearDupStore(batchDf.sparkSession, corpusDir, compactEvery)
         val parts = graft.operators.Dedup.buildNearDupIndex(
           batchDf.select(col(idCol), col(textCol)), textCol, idCol,
           w, numPerm, bands, cache = false)
         val within = parts.selfPairs(threshold)
-        // a corpus part (batch dir or compacted segment) counts only when
-        // BOTH its arrays and buckets halves carry _SUCCESS (they are
-        // written back to back; the pairing guards the half-written stray)
-        val corpusParts = pairedStoreParts(spark, subroots, batchId)
-        val pairs = corpusParts match {
-          case None => within
+        val pairs = store.readBefore(batchId) match {
           case Some(Seq(arraysDf, bucketsDf)) =>
             val corpus = graft.operators.Dedup.nearDupIndexFromParts(
               arraysDf, bucketsDf, w, numPerm, bands)
@@ -113,40 +86,56 @@ object StreamingDedup {
               .select(least(col("doc_a"), col("doc_b")).as("doc_a"),
                 greatest(col("doc_a"), col("doc_b")).as("doc_b"), col("jaccard"))
             within.unionByName(cross)
-          case Some(other) => sys.error(s"unexpected store parts: $other")
+          case _ => within
         }
         pairs.write.mode("overwrite").parquet(s"$resultDir/batch_id=$batchId")
-        parts.arrays.write.mode("overwrite")
-          .parquet(s"$corpusDir/arrays/batch_id=$batchId")
-        parts.buckets.write.mode("overwrite")
-          .parquet(s"$corpusDir/buckets/batch_id=$batchId")
-        maybeCompact(spark, subroots, batchId, compactEvery)
+        store.append(batchId, Seq(parts.arrays, parts.buckets))
       } finally graft.core.CacheScope.release()
     }
 
+  private def nearDupStore(spark: SparkSession, corpusDir: String,
+                           compactEvery: Int = AppendStore.CompactEvery) =
+    new AppendStore(spark, corpusDir, Seq("arrays", "buckets"), compactEvery)
+
+  /** SemDeDup on the ingest path — a `foreachBatch` sink: each arriving
+    * micro-batch is judged against the accumulated corpus with
+    * [[graft.operators.Dedup.semanticDedupIncremental]] (the first batch
+    * with [[graft.operators.Dedup.semanticDedup]]), keep flags land in
+    * `resultDir`, and the batch's vectors (kept AND dropped — the
+    * contract judges against all prior arrivals) append to the corpus
+    * store.
+    *
+    * Similarity has no equality key, so
+    * `dropDuplicatesWithinWatermark` cannot express this; the corpus
+    * store IS the state, unbounded by design (it's the curated dataset
+    * itself, not an eviction cache).
+    *
+    * Exactly-once: the corpus is a one-part [[AppendStore]] under
+    * `corpusDir`. The batch is judged against the committed batches below
+    * it, its flags overwrite `batch_id=N` under `resultDir`, and its
+    * vectors commit through the store's manifest last — a crash-replayed
+    * batch re-judges against exactly the pre-crash corpus and overwrites
+    * its own directories. Idempotent. The store folds once `compactEvery`
+    * batches are live.
+    *
+    * An empty micro-batch (a replayed committed range, an availableNow
+    * trigger with no data) writes nothing: it has no rows to judge, and
+    * seed selection inside semanticDedup requires some.
+    *
+    * With ids that grow over time (blockchain/ingest order), the seed set
+    * (the corpus's k smallest ids) freezes after the first batch, so
+    * assignment is stable across the stream and the folded result equals
+    * the one-shot batch dedup — the OperatorsSpec sequential-equivalence
+    * property.
+    */
   def semanticBatchSink(corpusDir: String, resultDir: String,
                         idCol: String, vecCol: String,
                         k: Int = 32, threshold: Double = 0.35,
-                        compactEvery: Int = DefaultCompactEvery)
+                        compactEvery: Int = AppendStore.CompactEvery)
       : (DataFrame, Long) => Unit = (batchDf, batchId) => {
-    val spark = batchDf.sparkSession
-    // COMMITTED prior parts only, by explicit directory list: a crash
-    // mid corpus write can leave corpusDir existing with zero committed
-    // files (just a _temporary dir), where a bare read of the root would
-    // throw "unable to infer schema" on every replay — wedging the
-    // stream. The _SUCCESS check is the commit marker; listing also makes
-    // the < batchId exclusion structural instead of a partition filter.
-    val committed = pairedStoreParts(spark, Seq(corpusDir), batchId)
-    // Empty micro-batch guard: Spark can hand foreachBatch an empty
-    // DataFrame (replay of a fully-committed offset range, no-new-data
-    // triggers with availableNow). An empty batch has no rows to judge
-    // and would otherwise crash the stream on the seed-selection
-    // require(seeds.nonEmpty) inside semanticDedup — writing nothing is
-    // the correct (and idempotent) outcome: no result partition, no
-    // corpus partition, and the _SUCCESS-committed listing already
-    // tolerates the gap in batch ids.
     try if (!batchDf.isEmpty) {
-      val judged = committed match {
+      val store = new AppendStore(batchDf.sparkSession, corpusDir, compactEvery = compactEvery)
+      val judged = store.readBefore(batchId) match {
         case Some(Seq(corpus)) => graft.operators.Dedup.semanticDedupIncremental(
           batchDf, corpus.select(col(idCol), col(vecCol)),
           idCol, vecCol, k, threshold)
@@ -154,344 +143,47 @@ object StreamingDedup {
           .semanticDedup(batchDf, idCol, vecCol, k, threshold)
       }
       judged.write.mode("overwrite").parquet(s"$resultDir/batch_id=$batchId")
-      batchDf.select(col(idCol), col(vecCol))
-        .write.mode("overwrite").parquet(s"$corpusDir/batch_id=$batchId")
-      maybeCompact(spark, Seq(corpusDir), batchId, compactEvery)
+      store.append(batchId, Seq(batchDf.select(col(idCol), col(vecCol))))
     } finally graft.core.CacheScope.release()
   }
 
-  // ------------------------------------------------- store layout + compaction
-
-  /** Fold trigger for the batch sinks: once this many committed batch
-    * dirs accumulate, everything below the current batch folds into one
-    * compact segment. The per-batch-directory overwrite sink is correct
-    * but directory-heavy at high batch counts — at 28,800 blocks/day a
-    * long-running stream's corpus store otherwise grows one directory
-    * (and its file handles, listings, and footer reads) per micro-batch
-    * forever. Same manifest-commit reasoning as
-    * [[PlugRunner.compactAppends]]; 0 disables.
-    */
-  val DefaultCompactEvery: Int = 64
-
-  private val BatchPrefix = "batch_id="
-  private val SegPrefix = "compact_upto="
-  private val MergedPrefix = "merged_upto="
-
-  /** Merge trigger for the SEGMENT tier: incremental folds accumulate one
-    * `compact_upto=` dir per [[DefaultCompactEvery]] batches forever —
-    * the same unbounded-directory class the folds were added to stop,
-    * one level up. Once this many incremental segments exist they roll
-    * into ONE cumulative `merged_upto=<W>` segment (all batches <= W).
-    * The merge rewrites the whole corpus, amortized to once per
-    * `SegmentMergeAt * compactEvery` batches (~1/512 at the defaults) —
-    * the standard LSM-ish trade: O(corpus) rewrite bought per O(corpus)
-    * of new appends keeps the store's directory count bounded by
-    * `SegmentMergeAt + compactEvery + 1` for the stream's lifetime.
-    */
-  val SegmentMergeAt: Int = 8
-
-  private def hfs(spark: org.apache.spark.sql.SparkSession, root: String) =
-    new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-
-  /** Committed (`_SUCCESS`-marked) child dirs of `root` named
-    * `<prefix><long>`, as sorted (id, path) pairs.
-    */
-  private def committedDirs(spark: org.apache.spark.sql.SparkSession,
-                            root: String, prefix: String): Seq[(Long, String)] = {
-    import org.apache.hadoop.fs.Path
-    val fs = hfs(spark, root)
-    val p = new Path(root)
-    if (!fs.exists(p)) Seq.empty
-    else fs.listStatus(p).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith(prefix))
-      .flatMap(s => s.getPath.getName.stripPrefix(prefix).toLongOption
-        .filter(_ => fs.exists(new Path(s.getPath, "_SUCCESS")))
-        .map(_ -> s.getPath.toString))
-      .sortBy(_._1)
-  }
-
-  /** The committed corpus visible to `batchId`, one frame per subroot —
-    * three tiers, newest data outermost:
-    *
-    *   1. the single CUMULATIVE `merged_upto=M` segment with the highest
-    *      paired M `< batchId` (it holds every batch `<= M`; older merged
-    *      segments a crashed GC left behind are superseded by max);
-    *   2. incremental `compact_upto=` segments with upto in `(M,
-    *      batchId)`, read as ONE multi-path parquet read (identical
-    *      schemas) — never a per-segment frame chain;
-    *   3. committed batch dirs in `(max segment upto, batchId)`.
-    *
-    * PAIRED everywhere (present and committed in ALL subroots — a crash
-    * between a multi-subroot write's halves leaves an unpaired stray that
-    * readers must ignore; its inputs are still on disk because GC only
-    * runs after every half commits). None when the store holds nothing.
-    * Segments carry their source `batch_id` as a column (fork truncation
-    * filters on it) which is dropped here.
-    */
-  private def pairedStoreParts(spark: org.apache.spark.sql.SparkSession,
-                               subroots: Seq[String],
-                               batchId: Long): Option[Seq[DataFrame]] = {
-    val mergedPer = subroots.map(r =>
-      committedDirs(spark, r, MergedPrefix).filter(_._1 < batchId).toMap)
-    val pairedMerged = mergedPer.map(_.keySet).reduce(_ intersect _)
-    val m = if (pairedMerged.isEmpty) -1L else pairedMerged.max
-    val segsPer = subroots.map(r =>
-      committedDirs(spark, r, SegPrefix)
-        .filter { case (w, _) => w > m && w < batchId }.toMap)
-    val paired = segsPer.map(_.keySet).reduce(_ intersect _)
-    val maxW = if (paired.isEmpty) m else math.max(m, paired.max)
-    val livesPer = subroots.map(r =>
-      committedDirs(spark, r, BatchPrefix)
-        .filter { case (n, _) => n > maxW && n < batchId })
-    // live ids must also pair across subroots (same half-written guard)
-    val pairedLive = livesPer.map(_.map(_._1).toSet).reduce(_ intersect _)
-    if (m < 0 && paired.isEmpty && pairedLive.isEmpty) None
-    else Some(subroots.indices.map { i =>
-      val mergedFrames =
-        if (m < 0) Nil
-        else Seq(spark.read.parquet(mergedPer(i)(m)).drop("batch_id"))
-      val segDirs = paired.toSeq.sorted.map(segsPer(i))
-      val segFrames =
-        if (segDirs.isEmpty) Nil
-        else Seq(spark.read.parquet(segDirs: _*).drop("batch_id"))
-      val liveDirs = livesPer(i).collect {
-        case (n, path) if pairedLive.contains(n) => path }
-      val liveFrames =
-        if (liveDirs.isEmpty) Nil else Seq(spark.read.parquet(liveDirs: _*))
-      (mergedFrames ++ segFrames ++ liveFrames).reduce(_.unionByName(_))
-    })
-  }
-
-  private def maybeCompact(spark: org.apache.spark.sql.SparkSession,
-                           subroots: Seq[String], batchId: Long,
-                           compactEvery: Int): Unit =
-    if (compactEvery > 0 &&
-        committedDirs(spark, subroots.head, BatchPrefix).size >= compactEvery)
-      compactStore(spark, subroots, batchId - 1)
-
-  /** Fold committed batch dirs `<= upToBatch` into one compact segment
-    * per subroot — the corpus-store counterpart of
-    * [[PlugRunner.compactAppends]]. Protocol, in commit order:
-    *
-    *  1. REPAIR: a fold watermark committed in one subroot but not all
-    *     (crash between halves) is completed first — the missing halves
-    *     re-fold the same `(prev, w]` range from their still-live batch
-    *     dirs (GC hadn't run, so the inputs are all present; the
-    *     overwrite is idempotent).
-    *  2. FOLD: each subroot writes batches `(maxExistingUpto, upToBatch]`
-    *     to `compact_upto=<upToBatch>`, committed by parquet `_SUCCESS`.
-    *     The source `batch_id` (the dir-name partition column) rides the
-    *     segment rows so fork truncation can still filter per batch.
-    *     Folding is incremental — a segment never re-reads prior
-    *     segments, so compaction cost is O(new data).
-    *  3. GC: batch dirs `<= upToBatch` are deleted LAST, only once every
-    *     subroot's segment is committed. A crash anywhere earlier leaves
-    *     dirs that [[pairedStoreParts]] already excludes (watermark rule)
-    *     or still reads (unpaired segment -> batches stay live) — never
-    *     a gap, never a double-read.
-    *
-    * Only call with `upToBatch` strictly below any batch id that may
-    * still replay; the sinks' auto-trigger uses `batchId - 1`, whose
-    * source offsets committed before the current batch started (the same
-    * replay-window argument as [[PlugRunner.compactAppends]]).
-    */
-  private[graft] def compactStore(spark: org.apache.spark.sql.SparkSession,
-                                      subroots: Seq[String],
-                                      upToBatch: Long): Unit = {
-    val segsPer = subroots.map(r =>
-      r -> committedDirs(spark, r, SegPrefix).map(_._1)).toMap
-    val targets = (segsPer.values.flatten.toSeq :+ upToBatch)
-      .distinct.sorted.filter(_ <= upToBatch)
-    // fold only batch ids committed in EVERY subroot: an unpaired
-    // half-written stray is excluded by readers and must stay excluded
-    // through a fold (folding it one-sided would smuggle half a batch
-    // into the paired segments)
-    val pairedIds = subroots
-      .map(r => committedDirs(spark, r, BatchPrefix).map(_._1).toSet)
-      .reduce(_ intersect _)
-    subroots.foreach { r =>
-      val have = segsPer(r).toSet
-      var prev = -1L
-      targets.foreach { w =>
-        if (!have.contains(w)) {
-          val ids = pairedIds.filter(n => n > prev && n <= w).toSeq.sorted
-          if (ids.nonEmpty)
-            spark.read.option("basePath", r)
-              .parquet(ids.map(n => s"$r/$BatchPrefix$n"): _*)
-              .withColumn("batch_id", col("batch_id").cast("long"))
-              .write.mode("overwrite").parquet(s"$r/$SegPrefix$w")
-        }
-        prev = w
-      }
-    }
-    // GC last: every target is now committed in every subroot, so every
-    // reader takes the segments and excludes these dirs by the watermark
-    // (the sweep also clears unpaired/replayed-folded strays <= the
-    // watermark — readers were already ignoring them)
-    val maxW = targets.lastOption.getOrElse(-1L)
-    subroots.foreach { r =>
-      val fs = hfs(spark, r)
-      committedDirs(spark, r, BatchPrefix)
-        .filter(_._1 <= maxW)
-        .foreach { case (_, path) =>
-          val p = new org.apache.hadoop.fs.Path(path)
-          fs.delete(new org.apache.hadoop.fs.Path(p, "_SUCCESS"), false)
-          fs.delete(p, true)
-        }
-    }
-    mergeSegments(spark, subroots)
-  }
-
-  /** The SEGMENT-tier roll-up (see [[SegmentMergeAt]]): once enough
-    * paired incremental segments accumulate, every subroot rewrites
-    * (prior merged segment + all incremental segments) into one
-    * cumulative `merged_upto=<maxUpto>`. Same commit discipline as the
-    * fold: the new merged segment is `_SUCCESS`-committed per subroot
-    * first (a subroot that already has it skips — that is the crash
-    * REPAIR path, inputs still on disk because GC hadn't run), GC of the
-    * superseded inputs runs strictly last, and a crash anywhere leaves
-    * readers consistent — [[pairedStoreParts]] takes the highest PAIRED
-    * merged watermark and ignores incremental segments at or below it.
-    */
-  private def mergeSegments(spark: org.apache.spark.sql.SparkSession,
-                            subroots: Seq[String]): Unit = {
-    val incrPer = subroots.map(r =>
-      r -> committedDirs(spark, r, SegPrefix).toMap).toMap
-    val pairedIncr = incrPer.values.map(_.keySet).reduce(_ intersect _)
-    if (pairedIncr.size < SegmentMergeAt) return
-    val m = pairedIncr.max
-    subroots.foreach { r =>
-      if (!committedDirs(spark, r, MergedPrefix).exists(_._1 == m)) {
-        val priorMerged = committedDirs(spark, r, MergedPrefix)
-          .filter(_._1 < m).toSeq.sortBy(_._1).lastOption
-        // Inputs = prior merged + incremental segments STRICTLY ABOVE its
-        // watermark. The watermark filter (not just the path) is
-        // load-bearing for crash repair at an ADVANCED watermark: a crash
-        // after this subroot committed merged_upto=M but before GC leaves
-        // both merged_upto=M and segments <= M on disk; when later folds
-        // trigger the next merge at m2 > M, rebuilding from
-        // (merged=M ++ ALL paired segments) would re-read the <= M
-        // segments whose rows merged=M already holds — every batch <= M
-        // duplicated in the new cumulative segment, then the inputs GC'd,
-        // permanently corrupting the corpus. merged=W is cumulative
-        // (every batch <= W), so dropping segments <= W loses nothing.
-        val priorW = priorMerged.map(_._1).getOrElse(-1L)
-        val inputs = priorMerged.map(_._2).toSeq ++
-          pairedIncr.toSeq.sorted.filter(_ > priorW).flatMap(incrPer(r).get)
-        spark.read.parquet(inputs: _*)
-          .write.mode("overwrite").parquet(s"$r/$MergedPrefix$m")
-      }
-    }
-    // GC strictly last — all subroots committed merged_upto=m above
-    subroots.foreach { r =>
-      val fs = hfs(spark, r)
-      (committedDirs(spark, r, MergedPrefix).filter(_._1 < m) ++
-        committedDirs(spark, r, SegPrefix).filter(_._1 <= m))
-        .foreach { case (_, path) =>
-          val p = new org.apache.hadoop.fs.Path(path)
-          fs.delete(new org.apache.hadoop.fs.Path(p, "_SUCCESS"), false)
-          fs.delete(p, true)
-        }
-    }
-  }
-
-  /** Roll a [[nearDupBatchSink]] store pair back to batches BELOW
-    * `fromBatch` — the corpus-store counterpart of
+  /** Roll a [[nearDupBatchSink]]'s corpus store and results back to
+    * batches BELOW `fromBatch` — the corpus-store counterpart of
     * [[PlugRunner.truncateFromBatch]] for a past-horizon fork. Replay
-    * alone is NOT enough after a fork that yields FEWER batches: stale
-    * `batch_id=N` dirs above the corrected feed's high-water mark stay
-    * _SUCCESS-committed and would pollute the corpus reads of every
-    * later batch. Call this alongside the plug-table truncation, then
-    * replay the corrected feed from `fromBatch` (with its checkpoint
-    * rewound or recreated — the sinks themselves are idempotent per
-    * batch id).
-    *
-    * Crash-safe and idempotent: each doomed dir loses its _SUCCESS
-    * marker FIRST — readers exclude it from that instant — and the
-    * recursive delete after is pure GC (same order as the append-table
-    * truncation in PlugRunner).
+    * alone is NOT enough after a fork that yields FEWER batches: the
+    * stale batches above the corrected feed's high-water mark would stay
+    * committed and pollute the corpus reads of every later batch. Call
+    * this alongside the plug-table truncation, with the stream stopped,
+    * then replay the corrected feed from `fromBatch` (with its checkpoint
+    * rewound or recreated — the sinks themselves are idempotent per batch
+    * id). A fork inside a folded or merged segment is handled
+    * ([[AppendStore.truncateFrom]]). Idempotent: re-run it after a crash.
     */
-  def truncateNearDupFrom(spark: org.apache.spark.sql.SparkSession,
-                          corpusDir: String, resultDir: String,
-                          fromBatch: Long): Unit =
-    truncateBatchDirsFrom(spark, fromBatch,
-      Seq(s"$corpusDir/arrays", s"$corpusDir/buckets", resultDir))
+  def truncateNearDupFrom(spark: SparkSession, corpusDir: String, resultDir: String,
+                          fromBatch: Long): Unit = {
+    nearDupStore(spark, corpusDir).truncateFrom(fromBatch)
+    dropResultsFrom(spark, resultDir, fromBatch)
+  }
 
-  /** [[truncateNearDupFrom]] for a [[semanticBatchSink]] store pair. */
-  def truncateSemanticFrom(spark: org.apache.spark.sql.SparkSession,
-                           corpusDir: String, resultDir: String,
-                           fromBatch: Long): Unit =
-    truncateBatchDirsFrom(spark, fromBatch, Seq(corpusDir, resultDir))
+  /** [[truncateNearDupFrom]] for a [[semanticBatchSink]]. */
+  def truncateSemanticFrom(spark: SparkSession, corpusDir: String, resultDir: String,
+                           fromBatch: Long): Unit = {
+    new AppendStore(spark, corpusDir).truncateFrom(fromBatch)
+    dropResultsFrom(spark, resultDir, fromBatch)
+  }
 
-  /** Truncation across both store layouts. Batch dirs `>= fromBatch` are
-    * dropped as before. A compacted segment whose fold watermark reaches
-    * into the doomed range is handled by COVERAGE: segments entirely
-    * above the fork point are deleted outright; the one BOUNDARY segment
-    * straddling it (covering `(prev, upto]` with `prev < fromBatch <=
-    * upto`) is rewritten filtered to its `batch_id < fromBatch` rows as
-    * `compact_upto=<fromBatch-1>` — the per-batch provenance column the
-    * fold keeps exists exactly for this. Commit order: the replacement
-    * segment lands (parquet `_SUCCESS`) before any doomed segment loses
-    * its marker, and a re-run is idempotent (the replacement is below the
-    * fork point, so it is never doomed). Like the pre-compaction
-    * truncation, this runs OFFLINE (stream stopped) — the reference's
-    * fork recovery is a stop-the-world operation too.
+  /** Delete the `batch_id=N` result directories with `N >= fromBatch`.
+    * Results are per-batch outputs, not state: no later batch reads them.
     */
-  private def truncateBatchDirsFrom(spark: org.apache.spark.sql.SparkSession,
-                                    fromBatch: Long, roots: Seq[String]): Unit = {
-    import org.apache.hadoop.fs.Path
-    roots.foreach { rootStr =>
-      val fs = hfs(spark, rootStr)
-      // merged tier first: CUMULATIVE content, so the highest doomed
-      // merged segment holds every batch <= its upto — rewrite its
-      // below-fork rows as merged_upto=<fromBatch-1> unless a kept
-      // merged already covers exactly that range
-      val (mDoomed, mKept) = committedDirs(spark, rootStr, MergedPrefix)
-        .partition(_._1 >= fromBatch)
-      mDoomed.sortBy(_._1).lastOption.foreach { case (_, path) =>
-        val keptMax = mKept.map(_._1).maxOption.getOrElse(-1L)
-        if (fromBatch - 1 > keptMax) {
-          val survivors = spark.read.parquet(path)
-            .filter(col("batch_id") < fromBatch)
-          if (!survivors.isEmpty)
-            survivors.write.mode("overwrite")
-              .parquet(s"$rootStr/$MergedPrefix${fromBatch - 1}")
-        }
-      }
-      mDoomed.foreach { case (_, path) =>
-        val p = new Path(path)
-        fs.delete(new Path(p, "_SUCCESS"), false)
-        fs.delete(p, true)
-      }
-      val segs = committedDirs(spark, rootStr, SegPrefix)
-      val (doomed, kept) = segs.partition(_._1 >= fromBatch)
-      doomed.headOption.foreach { case (upto, path) =>
-        // lowest doomed segment: the only one that can straddle the fork
-        val prev = kept.map(_._1).filter(_ < upto).maxOption.getOrElse(-1L)
-        if (fromBatch - 1 > prev) {
-          val survivors = spark.read.parquet(path)
-            .filter(col("batch_id") < fromBatch)
-          if (!survivors.isEmpty)
-            survivors.write.mode("overwrite")
-              .parquet(s"$rootStr/$SegPrefix${fromBatch - 1}")
-        }
-      }
-      doomed.foreach { case (_, path) =>
-        val p = new Path(path)
-        fs.delete(new Path(p, "_SUCCESS"), false)
-        fs.delete(p, true)
-      }
-      val root = new Path(rootStr)
-      if (fs.exists(root))
-        fs.listStatus(root).toSeq
-          .filter(s => s.isDirectory && s.getPath.getName.startsWith(BatchPrefix))
-          .filter(_.getPath.getName.stripPrefix(BatchPrefix)
-            .toLongOption.exists(_ >= fromBatch))
-          .foreach { s =>
-            fs.delete(new Path(s.getPath, "_SUCCESS"), false)
-            fs.delete(s.getPath, true)
-          }
-    }
+  private def dropResultsFrom(spark: SparkSession, resultDir: String, fromBatch: Long): Unit = {
+    val root = new org.apache.hadoop.fs.Path(resultDir)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (fs.exists(root))
+      fs.listStatus(root).map(_.getPath)
+        .filter(_.getName.split("=") match {
+          case Array("batch_id", n) => n.toLongOption.exists(_ >= fromBatch)
+          case _ => false
+        })
+        .foreach(fs.delete(_, true))
   }
 }

@@ -15,8 +15,8 @@ import org.apache.spark.sql.functions._
   *  2. OpLogTail — versioned-cursor GC: <= 2 cursor markers and no
   *     orphaned .tmp after every commit, cursor monotone, 1000 commits.
   *  3. StreamingDedup.nearDupBatchSink — corpus store bound
-  *     (merged + segments + live <= SegmentMergeAt + compactEvery + 1 per
-  *     subroot, every batch) and EXACT fold equivalence of the
+  *     (merged + segments + live <= MergeSegmentsAt + compactEvery + 1 per
+  *     part, at least one, every batch) and EXACT fold equivalence of the
   *     accumulated pair results against the one-shot batch operator over
   *     the full corpus at the end.
   *  4. PointIndex — an epoch roll every 20 batches; every build must
@@ -200,14 +200,19 @@ object Soak {
           (2 * i + 1, s"one two three four five six seven $tag extra"))
         .toDF("doc_id", "text")
     }
-    val bound = graft.streaming.StreamingDedup.SegmentMergeAt + compactEvery + 1
+    import graft.streaming.AppendStore
+    val bound = AppendStore.MergeSegmentsAt + compactEvery + 1
+    def entries(dir: String) = Option(new java.io.File(dir).list()).toSeq.flatten
     t0 = System.nanoTime()
     (0L until ndBatches).foreach { i =>
       sink(docBatch(i), i)
       Seq("arrays", "buckets").foreach { sub =>
-        val dirs = Option(new java.io.File(s"$corpus/$sub").list()).toSeq.flatten
-          .count(d => d.startsWith("batch_id=") || d.startsWith("compact_upto=") ||
-            d.startsWith("merged_upto="))
+        val dirs = entries(s"$corpus/$sub").count(_.startsWith(AppendStore.BatchPrefix)) +
+          entries(s"$corpus/$sub/${AppendStore.CompactDir}").count(d =>
+            d.startsWith(AppendStore.SegPrefix) || d.startsWith(AppendStore.MergedPrefix))
+        // every batch has rows, so a count of 0 means the layout moved and
+        // this check is counting nothing
+        if (dirs == 0) fail(s"nd batch $i: no store directory found under $corpus/$sub")
         if (dirs > bound) fail(s"nd batch $i: $sub has $dirs dirs > bound $bound")
       }
       if (i % 100 == 0) println(f"[soak] neardup $i/$ndBatches (${(System.nanoTime - t0) / 1e9}%.0f s)")

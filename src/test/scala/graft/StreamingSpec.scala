@@ -3,7 +3,7 @@ package graft
 import java.nio.file.Files
 import graft.core.OpLog
 import graft.plugs.Podping
-import graft.streaming.{PlugRunner, PollsStreaming}
+import graft.streaming.{AppendStore, PlugRunner, PollsStreaming}
 import org.apache.spark.sql.functions._
 
 /** End-to-end Structured Streaming: file source -> plug transform ->
@@ -14,6 +14,15 @@ class StreamingSpec extends SparkSpec {
   import Fixtures._
 
   private def tmp(): String = Files.createTempDirectory("graft").toString
+
+  /** An append store part's directories: its `_batch_id=` batches and its
+    * `_compact` folds (`v=`) and merges (`m=`), sorted.
+    */
+  private def storeDirs(part: String): Seq[String] = {
+    def ls(d: String) = Option(new java.io.File(d).listFiles()).toSeq.flatten
+      .filter(_.isDirectory).map(_.getName)
+    (ls(part).filter(_.startsWith("_batch_id=")) ++ ls(s"$part/_compact")).sorted
+  }
 
   private def writeBatch(dir: String, part: Int, rows: Seq[org.apache.spark.sql.Row]): Unit =
     opLog(spark, rows).write.mode("append").parquet(s"$dir/b$part")
@@ -143,7 +152,7 @@ class StreamingSpec extends SparkSpec {
         case x: SparkListenerSQLExecutionStart =>
           val caller = x.details.linesIterator.find(_.contains("graft.")).getOrElse("")
           kindOf.put(x.executionId.toString,
-            if (caller.contains("PlugRunner.$anonfun$commitBatch")) "append"
+            if (caller.contains("AppendStore.$anonfun$append")) "append"
             else if (caller.contains("PlugState$.checkIn") && x.description.startsWith("head "))
               "cursor"
             else "other")
@@ -341,6 +350,50 @@ class StreamingSpec extends SparkSpec {
     sameAsFresh("truncated", urls(19))
     (19 until 21).foreach(i => runner.processBatch(batch(i, "c"), i.toLong))
     sameAsFresh("forked", urls(19) ++ Seq("c19", "c20"))
+  }
+
+  test("append table fork inside a folded or merged segment: truncate and replay equal a fresh build") {
+    def compacting(dir: String) = new PlugRunner(Podping, dir) { override val CompactEvery = 3 }
+    def feed(r: PlugRunner, history: Seq[(Int, String)]): Unit = history.foreach { case (i, tag) =>
+      r.processBatch(opLog(spark, Seq(
+        op(i.toLong, 100 + i, 0, "2024-01-01 00:00:00", "podping", podpingV03(Seq(s"$tag$i"))))),
+        i.toLong)
+    }
+    def sameAsFresh(step: String, r: PlugRunner, history: Seq[(Int, String)]): Unit = {
+      val fresh = compacting(tmp())
+      feed(fresh, history)
+      Seq("ops", "updates").foreach { t =>
+        val (got, want) = (r.table(spark, t), fresh.table(spark, t))
+        assert(got.count() === history.size.toLong, s"$step: $t")
+        assert(got.exceptAll(want).count() === 0 && want.exceptAll(got).count() === 0, s"$step: $t")
+      }
+    }
+    def compacted(out: String) = storeDirs(s"$out/podping/updates").filterNot(_.startsWith("_batch_id="))
+    val out = tmp()
+    val runner = compacting(out)
+    val u = (0 until 20).map(_ -> "u")
+    // a fold every other batch; the eighth fold (batch 16) merges folds
+    // 1..15 into m=15, then fold 17 lands and batches 18, 19 stay live
+    feed(runner, u)
+    assert(compacted(out) === Seq("m=15", "v=17"))
+    // a fork at batch 10, inside the merged segment: its rows below the
+    // fork are rewritten as m=9, everything above goes
+    runner.truncateFromBatch(spark, Seq("ops", "updates"), 10L)
+    assert(compacted(out) === Seq("m=9"))
+    assert(spark.read.parquet(s"$out/podping/updates/_compact/m=9")
+      .select("_batch_id").distinct().collect().map(_.getLong(0)).toSet === (0L until 10L).toSet)
+    val c = (10 until 20).map(_ -> "c")
+    feed(runner, c)
+    sameAsFresh("merged fork", runner, u.take(10) ++ c)
+    // a fork at batch 13, inside fold v=13 of batches 12 and 13
+    assert(compacted(out).contains("v=13"))
+    runner.truncateFromBatch(spark, Seq("ops", "updates"), 13L)
+    assert(compacted(out) === Seq("m=9", "v=11", "v=12"))
+    val d = (13 until 20).map(_ -> "d")
+    feed(runner, d)
+    sameAsFresh("fold fork", runner, u.take(10) ++ c.take(3) ++ d)
+    // what is on disk reads the same in a fresh runner
+    sameAsFresh("restart", compacting(out), u.take(10) ++ c.take(3) ++ d)
   }
 
   test("plug_state check-in dirs stay bounded; cursor and max batch id survive folding") {
@@ -978,7 +1031,7 @@ class StreamingSpec extends SparkSpec {
     sink(docs.filter(lit(false)), 9L)
     assert(resultSet() === oneShot)
     assert(!new java.io.File(s"$results/batch_id=9").exists())
-    assert(!new java.io.File(s"$corpus/arrays/batch_id=9").exists())
+    assert(!new java.io.File(s"$corpus/arrays/_batch_id=9").exists())
     docs.unpersist()
   }
 
@@ -1002,17 +1055,13 @@ class StreamingSpec extends SparkSpec {
       .nearDupBatchSink(corpus, results, "text", "doc_id", 3, 128, 32, 0.8,
         compactEvery = 4)
     slices.zipWithIndex.foreach { case (b, i) => sink(b, i.toLong) }
-    def dirNames(sub: String): Seq[String] = {
-      val d = new java.io.File(s"$corpus/$sub")
-      if (!d.exists()) Seq.empty
-      else d.listFiles().toSeq.map(_.getName).filter(!_.startsWith("_")).sorted
-    }
+    def dirNames(sub: String): Seq[String] = storeDirs(s"$corpus/$sub")
     // growth audit: the per-batch dirs folded into segments — the
     // directory count is bounded by compactEvery + segments, NOT by the
     // number of batches ever processed
     Seq("arrays", "buckets").foreach { sub =>
       val names = dirNames(sub)
-      val (segs, lives) = names.partition(_.startsWith("compact_upto="))
+      val (lives, segs) = names.partition(_.startsWith("_batch_id="))
       assert(lives.size < 4, s"$sub live dirs unbounded: $names")
       assert(segs.nonEmpty, s"$sub never folded: $names")
       assert(names.size < nBatches, s"$sub directory count grew per batch: $names")
@@ -1042,9 +1091,9 @@ class StreamingSpec extends SparkSpec {
     val fork = nBatches - 4L
     graft.streaming.StreamingDedup.truncateNearDupFrom(spark, corpus, results, fork)
     // every surviving segment row sits below the fork point
-    dirNames("arrays").filter(_.startsWith("compact_upto=")).foreach { s =>
-      val above = spark.read.parquet(s"$corpus/arrays/$s")
-        .filter(col("batch_id") >= fork).count()
+    dirNames("arrays").filter(!_.startsWith("_batch_id=")).foreach { s =>
+      val above = spark.read.parquet(s"$corpus/arrays/_compact/$s")
+        .filter(col("_batch_id") >= fork).count()
       assert(above === 0L, s"segment $s kept rows at/above the fork point")
     }
     (fork.toInt until nBatches).foreach(i => sink(slices(i), i.toLong))
@@ -1060,7 +1109,6 @@ class StreamingSpec extends SparkSpec {
     val cut = ids(ids.length / 2)
     val base = java.nio.file.Files.createTempDirectory("ndcrash").toString
     val (corpus, results) = (s"$base/corpus", s"$base/results")
-    val subroots = Seq(s"$corpus/arrays", s"$corpus/buckets")
     // two batches, auto-compaction OFF — the crash state is built by hand
     val sink = graft.streaming.StreamingDedup
       .nearDupBatchSink(corpus, results, "text", "doc_id", 3, 128, 32, 0.8,
@@ -1070,33 +1118,79 @@ class StreamingSpec extends SparkSpec {
     def resultSet() = spark.read.parquet(results).collect()
       .map(r => (r.getAs[Long]("doc_a"), r.getAs[Long]("doc_b"))).toSet
     val before = resultSet()
-    // CRASH SNAPSHOT between the fold's halves: arrays/compact_upto=0 is
-    // committed, the buckets half never ran, GC never ran (it only runs
-    // after EVERY subroot commits) — exactly what a kill mid-compactStore
-    // leaves behind
+    def store() = new AppendStore(spark, corpus, Seq("arrays", "buckets"))
+    def corpusDocs() = store().read().get.head.select("doc").collect().map(_.getLong(0)).toSeq
+    val docsBefore = corpusDocs()
+    // CRASH SNAPSHOT inside a fold of batch 0 on the two-part store: the
+    // arrays half of _compact/v=0 is written, the buckets half never ran,
+    // and neither did the manifest swap that commits both
     spark.read.option("basePath", s"$corpus/arrays")
-      .parquet(s"$corpus/arrays/batch_id=0")
-      .withColumn("batch_id", col("batch_id").cast("long"))
-      .write.mode("overwrite").parquet(s"$corpus/arrays/compact_upto=0")
-    // reads in this state must IGNORE the unpaired segment and keep
-    // serving the still-live paired batch dirs: a replay of batch 1 sees
-    // the identical corpus and reproduces its result bytes
+      .parquet(s"$corpus/arrays/_batch_id=0")
+      .withColumn("_batch_id", col("_batch_id").cast("long"))
+      .write.mode("overwrite").parquet(s"$corpus/arrays/_compact/v=0")
+    // reads in this state are unchanged: the manifest lists batch 0 as
+    // live, so a replay of batch 1 sees the identical corpus and
+    // reproduces its result bytes
+    assert(corpusDocs() === docsBefore)
     sink(docs.filter(col("doc_id") >= cut), 1L)
     assert(resultSet() === before, "unpaired segment leaked into the corpus read")
-    // the next compaction REPAIRS: the buckets half re-folds the same
-    // range from its live dirs, both halves pair, GC clears the folded
-    // batch dirs
-    graft.streaming.StreamingDedup.compactStore(spark, subroots, 0L)
+    // the next fold REPAIRS: both halves re-fold the same range, one
+    // manifest swap commits them, GC clears the folded batch dirs
+    store().compact(0L)
     Seq("arrays", "buckets").foreach { sub =>
-      assert(new java.io.File(s"$corpus/$sub/compact_upto=0/_SUCCESS").exists(),
+      assert(new java.io.File(s"$corpus/$sub/_compact/v=0/_SUCCESS").exists(),
         s"$sub fold half missing after repair")
-      assert(!new java.io.File(s"$corpus/$sub/batch_id=0").exists(),
+      assert(!new java.io.File(s"$corpus/$sub/_batch_id=0").exists(),
         s"$sub folded batch dir not GC'd after repair")
     }
-    // and the repaired store reads identically
+    // and the repaired store reads identically, no batch twice
+    assert(corpusDocs().sorted === docsBefore.sorted)
     sink(docs.filter(col("doc_id") >= cut), 1L)
     assert(resultSet() === before, "repaired store changed the corpus read")
     graft.core.CacheScope.release()
+    docs.unpersist()
+  }
+
+  test("near-dup corpus store: a half-written batch (arrays landed, buckets not) is invisible to later batches and folds") {
+    import org.apache.spark.sql.functions._
+    val docs = graft.core.Tables.documents(spark, "/root/testdata/sf0.001")
+      .select("doc_id", "text").filter(col("doc_id") < 300).cache()
+    val ids = docs.select("doc_id").collect().map(_.getLong(0)).sorted
+    val (cut1, cut2) = (ids(ids.length / 3), ids(2 * ids.length / 3))
+    val b0 = docs.filter(col("doc_id") < cut1)
+    val b1 = docs.filter(col("doc_id") >= cut1 && col("doc_id") < cut2)
+    val b2 = docs.filter(col("doc_id") >= cut2)
+    val base = java.nio.file.Files.createTempDirectory("ndhalf").toString
+    val corpus = s"$base/corpus"
+    val sink = graft.streaming.StreamingDedup
+      .nearDupBatchSink(corpus, s"$base/results", "text", "doc_id", 3, 128, 32, 0.8,
+        compactEvery = 0)
+    sink(b0, 0L)
+    // crash inside batch 1's corpus write: its arrays half landed, its
+    // buckets half and the manifest swap never did (a shorter chain after
+    // a fork may never replay it)
+    graft.operators.Dedup.buildNearDupIndex(b1, "text", "doc_id", 3, 128, 32, cache = false)
+      .arrays.withColumn("_batch_id", lit("1"))
+      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+      .partitionBy("_batch_id").parquet(s"$corpus/arrays")
+    graft.core.CacheScope.release()
+    assert(new java.io.File(s"$corpus/arrays/_batch_id=1").exists())
+    sink(b2, 2L)
+    // the corpus a later batch reads holds batches 0 and 2, none of batch 1
+    def docSet(df: org.apache.spark.sql.DataFrame) =
+      df.select("doc").collect().map(_.getLong(0)).toSet
+    def idSet(df: org.apache.spark.sql.DataFrame) =
+      df.select("doc_id").collect().map(_.getLong(0)).toSet
+    val store = new AppendStore(spark, corpus, Seq("arrays", "buckets"))
+    val Some(Seq(arrays, buckets)) = store.readBefore(3L)
+    assert(docSet(arrays) === idSet(b0) ++ idSet(b2))
+    assert(docSet(buckets).subsetOf(idSet(b0) ++ idSet(b2)))
+    // and a fold over it leaves the half batch out and sweeps its dir
+    store.compact(2L)
+    assert(spark.read.parquet(s"$corpus/arrays/_compact/v=2")
+      .select("_batch_id").distinct().collect().map(_.getLong(0)).toSet === Set(0L, 2L))
+    assert(!new java.io.File(s"$corpus/arrays/_batch_id=1").exists())
+    assert(docSet(store.read().get.head) === idSet(b0) ++ idSet(b2))
     docs.unpersist()
   }
 
@@ -1146,142 +1240,104 @@ class StreamingSpec extends SparkSpec {
     sink(emb.filter(lit(false)), 3L)
     assert(resultMap() === oneShot)
     assert(!new java.io.File(s"$results/batch_id=3").exists())
-    assert(!new java.io.File(s"$corpus/batch_id=3").exists())
+    assert(!new java.io.File(s"$corpus/_batch_id=3").exists())
     emb.unpersist()
   }
 
   test("segment merge tier: incremental segments roll into one cumulative merged segment; crash between halves repairs") {
-    import org.apache.spark.sql.functions._
     import spark.implicits._
+    val mergeAt = AppendStore.MergeSegmentsAt
+    val parts = Seq("arrays", "buckets")
+    def frames(id: Long) = parts.map(_ => Seq((id * 10, id * 100)).toDF("doc", "v"))
+    def names(root: String, part: String) = storeDirs(s"$root/$part")
+    def docs(store: AppendStore) =
+      store.read().get.map(_.select("doc").collect().map(_.getLong(0)).toSeq.sorted)
+    // a two-part store, one fold per batch -> mergeAt folds; the merge
+    // fires inside the fold that commits the mergeAt-th
     val base = java.nio.file.Files.createTempDirectory("segmerge").toString
-    val subroots = Seq(s"$base/arrays", s"$base/buckets")
-    val mergeAt = graft.streaming.StreamingDedup.SegmentMergeAt
-    def writeBatch(id: Long): Unit = subroots.foreach { r =>
-      Seq((id * 10, id * 100)).toDF("doc", "v")
-        .write.parquet(s"$r/batch_id=$id")
+    val store = new AppendStore(spark, base, parts, compactEvery = 0)
+    (0L until mergeAt).foreach { i => store.append(i, frames(i)); store.compact(i) }
+    parts.foreach { p =>
+      assert(names(base, p) === Seq(s"m=${mergeAt - 1}"),
+        s"expected ONE merged segment in $p, got ${names(base, p)}")
     }
-    def names(r: String): Seq[String] = {
-      val d = new java.io.File(r)
-      if (!d.exists()) Seq.empty
-      else d.listFiles().toSeq.map(_.getName).filter(!_.startsWith("_")).sorted
-    }
-    // one fold per batch -> mergeAt incremental segments; the merge
-    // auto-triggers inside the compactStore call that commits the
-    // mergeAt-th segment
-    (0L until mergeAt).foreach { i =>
-      writeBatch(i)
-      graft.streaming.StreamingDedup.compactStore(spark, subroots, i)
-    }
-    subroots.foreach { r =>
-      val n = names(r)
-      assert(n === Seq(s"merged_upto=${mergeAt - 1}"),
-        s"expected ONE merged segment in $r, got $n")
-    }
+    assert(store.manifest === AppendStore.Manifest(Nil, Nil, Some(mergeAt - 1L)))
     // cumulative content: every batch's rows, provenance intact
-    val merged = spark.read.parquet(s"${subroots.head}/merged_upto=${mergeAt - 1}")
-    assert(merged.select("doc", "batch_id").collect()
+    val merged = spark.read.parquet(s"$base/arrays/_compact/m=${mergeAt - 1}")
+    assert(merged.select("doc", "_batch_id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet ===
       (0L until mergeAt).map(i => (i * 10, i)).toSet)
     // directory count stays bounded through another full cycle (the next
     // merge folds the PRIOR merged segment forward)
-    (mergeAt until 2 * mergeAt).foreach { i =>
-      writeBatch(i)
-      graft.streaming.StreamingDedup.compactStore(spark, subroots, i)
+    (mergeAt.toLong until 2L * mergeAt).foreach { i => store.append(i, frames(i)); store.compact(i) }
+    parts.foreach { p =>
+      assert(names(base, p) === Seq(s"m=${2 * mergeAt - 1}"),
+        s"second cycle did not re-merge in $p: ${names(base, p)}")
     }
-    subroots.foreach { r =>
-      assert(names(r) === Seq(s"merged_upto=${2 * mergeAt - 1}"),
-        s"second cycle did not re-merge in $r: ${names(r)}")
-    }
-    val merged2 = spark.read.parquet(s"${subroots.head}/merged_upto=${2 * mergeAt - 1}")
+    val merged2 = spark.read.parquet(s"$base/arrays/_compact/m=${2 * mergeAt - 1}")
     assert(merged2.count() === 2L * mergeAt, "second merge lost prior merged rows")
-    // crash between merge halves: build mergeAt paired segments by hand
-    // (folds only — one below the trigger, last one written manually so
-    // no auto-merge runs), commit the arrays half of the merge, kill.
-    // The next compactStore call must complete the buckets half from the
-    // still-present segments and GC the inputs.
+    // crash between merge halves: mergeAt folds committed with the merge
+    // off, then the arrays half of the merge written; the buckets half,
+    // the manifest swap and GC never ran
     val base2 = java.nio.file.Files.createTempDirectory("segmerge2").toString
-    val sub2 = Seq(s"$base2/arrays", s"$base2/buckets")
-    def writeBatch2(id: Long): Unit = sub2.foreach { r =>
-      Seq((id * 10, id * 100)).toDF("doc", "v")
-        .write.parquet(s"$r/batch_id=$id")
-    }
-    (0L until (mergeAt - 1)).foreach { i =>
-      writeBatch2(i)
-      graft.streaming.StreamingDedup.compactStore(spark, sub2, i)
-    }
+    val noMerge = new AppendStore(spark, base2, parts, compactEvery = 0, mergeAt = 0)
+    (0L until mergeAt).foreach { i => noMerge.append(i, frames(i)); noMerge.compact(i) }
     val last = mergeAt - 1L
-    writeBatch2(last)
-    sub2.foreach { r => // the mergeAt-th fold, by hand (no merge runs)
-      spark.read.option("basePath", r).parquet(s"$r/batch_id=$last")
-        .withColumn("batch_id", col("batch_id").cast("long"))
-        .write.parquet(s"$r/compact_upto=$last")
+    spark.read.parquet((0L to last).map(w => s"$base2/arrays/_compact/v=$w"): _*)
+      .write.parquet(s"$base2/arrays/_compact/m=$last")
+    // reads are unchanged across the crash: the manifest lists the folds
+    val restarted = new AppendStore(spark, base2, parts, compactEvery = 0)
+    val want = parts.map(_ => (0L to last).map(_ * 10))
+    assert(docs(restarted) === want)
+    // the next compaction repairs: both halves merged, one swap, inputs GC'd
+    restarted.compact(last)
+    parts.foreach { p =>
+      assert(names(base2, p) === Seq(s"m=$last"), s"crash repair incomplete in $p: ${names(base2, p)}")
     }
-    // crashed merge: arrays half committed, buckets half missing
-    spark.read.parquet((0L to last).map(w => s"${sub2.head}/compact_upto=$w"): _*)
-      .write.parquet(s"${sub2.head}/merged_upto=$last")
-    graft.streaming.StreamingDedup.compactStore(spark, sub2, last)
-    sub2.foreach { r =>
-      assert(names(r) === Seq(s"merged_upto=$last"),
-        s"crash repair incomplete in $r: ${names(r)}")
-    }
-    assert(spark.read.parquet(s"${sub2(1)}/merged_upto=$last").count() === mergeAt.toLong,
+    assert(spark.read.parquet(s"$base2/buckets/_compact/m=$last").count() === mergeAt.toLong,
       "repaired buckets half lost rows")
+    // no batch below the merged watermark is read twice
+    assert(docs(restarted) === want)
+    assert(docs(new AppendStore(spark, base2, parts)) === want)
   }
 
   test("segment merge crash repair at an ADVANCED watermark does not duplicate batches below the committed half") {
-    // Crash between merge halves at watermark M (arrays committed
-    // merged_upto=M, buckets did not, GC never ran — segments <= M still
-    // on disk), then ONE MORE fold lands before the repair merge fires at
-    // m2 > M. The arrays rebuild must read merged_upto=M plus ONLY the
-    // segments strictly above M: re-reading the <= M segments would
-    // duplicate every batch <= M in the new cumulative segment and then
-    // GC the evidence — permanent corpus corruption.
-    import org.apache.spark.sql.functions._
+    // Crash between merge halves at watermark M (arrays wrote m=M, buckets
+    // did not, the manifest swap and GC never ran — folds <= M still on
+    // disk), then ONE MORE fold lands before the repair merge fires at
+    // m2 > M. The merge reads its inputs from the manifest, which lists
+    // the folds and not the half-written m=M: re-reading both would
+    // duplicate every batch <= M in the new cumulative segment and then GC
+    // the evidence — permanent corpus corruption.
     import spark.implicits._
-    val mergeAt = graft.streaming.StreamingDedup.SegmentMergeAt
+    val mergeAt = AppendStore.MergeSegmentsAt
+    val parts = Seq("arrays", "buckets")
+    def frames(id: Long) = parts.map(_ => Seq((id * 10, id * 100)).toDF("doc", "v"))
     val base = java.nio.file.Files.createTempDirectory("segmergeadv").toString
-    val subroots = Seq(s"$base/arrays", s"$base/buckets")
-    def writeBatch(id: Long): Unit = subroots.foreach { r =>
-      Seq((id * 10, id * 100)).toDF("doc", "v")
-        .write.parquet(s"$r/batch_id=$id")
-    }
-    def names(r: String): Seq[String] = {
-      val d = new java.io.File(r)
-      if (!d.exists()) Seq.empty
-      else d.listFiles().toSeq.map(_.getName).filter(!_.startsWith("_")).sorted
-    }
-    // mergeAt paired segments without an auto-merge (last fold by hand)
-    (0L until (mergeAt - 1)).foreach { i =>
-      writeBatch(i)
-      graft.streaming.StreamingDedup.compactStore(spark, subroots, i)
-    }
+    // mergeAt folds with the merge off
+    val noMerge = new AppendStore(spark, base, parts, compactEvery = 0, mergeAt = 0)
     val m1 = mergeAt - 1L
-    writeBatch(m1)
-    subroots.foreach { r =>
-      spark.read.option("basePath", r).parquet(s"$r/batch_id=$m1")
-        .withColumn("batch_id", col("batch_id").cast("long"))
-        .write.parquet(s"$r/compact_upto=$m1")
-    }
-    // crash: arrays half of the merge at M=m1 committed, buckets half and
-    // GC never ran
-    spark.read.parquet((0L to m1).map(w => s"${subroots.head}/compact_upto=$w"): _*)
-      .write.parquet(s"${subroots.head}/merged_upto=$m1")
+    (0L to m1).foreach { i => noMerge.append(i, frames(i)); noMerge.compact(i) }
+    // crash: arrays half of the merge at M=m1 written, nothing else
+    spark.read.parquet((0L to m1).map(w => s"$base/arrays/_compact/v=$w"): _*)
+      .write.parquet(s"$base/arrays/_compact/m=$m1")
     // one more batch + fold BEFORE the repair — advances the merge
     // watermark to m2 = mergeAt > M
     val m2 = mergeAt.toLong
-    writeBatch(m2)
-    graft.streaming.StreamingDedup.compactStore(spark, subroots, m2)
-    subroots.foreach { r =>
-      assert(names(r) === Seq(s"merged_upto=$m2"),
-        s"advanced-watermark repair incomplete in $r: ${names(r)}")
-      val rows = spark.read.parquet(s"$r/merged_upto=$m2")
-        .select("doc", "batch_id").collect()
+    val restarted = new AppendStore(spark, base, parts, compactEvery = 0)
+    restarted.append(m2, frames(m2))
+    restarted.compact(m2)
+    parts.foreach { p =>
+      assert(storeDirs(s"$base/$p") === Seq(s"m=$m2"),
+        s"advanced-watermark repair incomplete in $p: ${storeDirs(s"$base/$p")}")
+      val rows = spark.read.parquet(s"$base/$p/_compact/m=$m2")
+        .select("doc", "_batch_id").collect()
         .map(row => (row.getLong(0), row.getLong(1))).toSeq
       assert(rows.size === rows.distinct.size,
-        s"duplicated rows in $r after advanced-watermark repair: " +
+        s"duplicated rows in $p after advanced-watermark repair: " +
           rows.groupBy(identity).filter(_._2.size > 1).keys.toSeq.sorted.mkString(", "))
       assert(rows.toSet === (0L to m2).map(i => (i * 10, i)).toSet,
-        s"advanced-watermark repair lost or corrupted batches in $r")
+        s"advanced-watermark repair lost or corrupted batches in $p")
     }
   }
 
@@ -1304,9 +1360,8 @@ class StreamingSpec extends SparkSpec {
         hiOpt.map(col("vec_id") < _).getOrElse(lit(true))), i.toLong)
     }
     // the single-subroot store folded: segments exist, live dirs bounded
-    val names = new java.io.File(corpus).listFiles().toSeq
-      .map(_.getName).filter(!_.startsWith("_")).sorted
-    val (segs, lives) = names.partition(_.startsWith("compact_upto="))
+    val names = storeDirs(corpus)
+    val (lives, segs) = names.partition(_.startsWith("_batch_id="))
     assert(segs.nonEmpty, s"semantic store never folded: $names")
     assert(lives.size < 3, s"semantic live dirs unbounded: $names")
     // folding must not change a single judgment: identical to one-shot
@@ -1349,9 +1404,10 @@ class StreamingSpec extends SparkSpec {
     sink(b1, 0L); sink(b2, 1L); sink(b3, 2L)
     graft.streaming.StreamingDedup.truncateNearDupFrom(spark, corpus, results, 1L)
     // post-truncation invariant: only batch 0 remains, everywhere
-    Seq(s"$corpus/arrays", s"$corpus/buckets", results).foreach { d =>
-      val kept = new java.io.File(d).listFiles().filter(_.getName.startsWith("batch_id="))
-      assert(kept.map(_.getName).toSet === Set("batch_id=0"), d)
+    Seq(s"$corpus/arrays" -> "_batch_id=", s"$corpus/buckets" -> "_batch_id=",
+        results -> "batch_id=").foreach { case (d, prefix) =>
+      val kept = new java.io.File(d).listFiles().filter(_.getName.startsWith(prefix))
+      assert(kept.map(_.getName).toSet === Set(s"${prefix}0"), d)
     }
     sink(b2fork, 1L) // corrected feed replays; the shorter chain ends here
     // fresh rebuild from the corrected history on clean dirs
