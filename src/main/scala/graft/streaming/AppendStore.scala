@@ -43,8 +43,7 @@ import org.apache.spark.sql.functions._
   * reads the file again, as a fresh store (a restart) does.
   */
 class AppendStore(spark: SparkSession, root: String, parts: Seq[String] = Seq(""),
-                  compactEvery: Int = AppendStore.CompactEvery,
-                  mergeAt: Int = AppendStore.MergeSegmentsAt) {
+                  compactEvery: Int = AppendStore.CompactEvery) {
   import AppendStore._
 
   private val manifestPath = new Path(root, "_append_manifest")
@@ -124,8 +123,10 @@ class AppendStore(spark: SparkSession, root: String, parts: Seq[String] = Seq(""
     * lands first, so a crash before the manifest swap replays the batch
     * (source offsets commit after the sink returns) and re-runs both steps;
     * a replayed id is already a member. An empty frame writes no directory
-    * (dynamic overwrite of zero rows), so the id is committed only when
-    * every part's directory exists: a committed id always names data.
+    * (dynamic overwrite of zero rows), so the id is committed only when the
+    * first part's directory exists: a committed id always names data. A
+    * later part whose frame is empty then gets a directory holding one
+    * schema-only file, so a committed id names a directory in every part.
     *
     * Once [[compactEvery]] ids are live, everything before this batch folds
     * ([[compact]]): ids below `batchId` are past their replay window, their
@@ -146,8 +147,11 @@ class AppendStore(spark: SparkSession, root: String, parts: Seq[String] = Seq(""
     }
     val before = manifest
     val m =
-      if (!parts.forall(p => fs.exists(new Path(batchDir(p, batchId))))) before
+      if (!fs.exists(new Path(batchDir(parts.head, batchId)))) before
       else {
+        parts.zip(frames).tail.foreach { case (p, df) =>
+          if (!fs.exists(new Path(batchDir(p, batchId)))) write(df.limit(0), batchDir(p, batchId))
+        }
         val added = before.copy(live = (before.live.toSet + batchId).toSeq.sorted)
         commit(added)
         added
@@ -190,16 +194,16 @@ class AppendStore(spark: SparkSession, root: String, parts: Seq[String] = Seq(""
   }
 
   /** The fold-tier roll-up: folds still add one directory per
-    * [[compactEvery]] batches forever, so once [[mergeAt]] are committed
-    * they and the prior merge (if any) are rewritten into one cumulative
-    * `_compact/m=<W>`. The rewrite is amortised to once per
-    * `mergeAt * compactEvery` batches, the LSM trade that bounds each part
-    * by `mergeAt + compactEvery + 1` directories for the stream's
-    * lifetime. Its inputs are the manifest's, so a merge directory a
+    * [[compactEvery]] batches forever, so once [[MergeSegmentsAt]] are
+    * committed they and the prior merge (if any) are rewritten into one
+    * cumulative `_compact/m=<W>`. The rewrite is amortised to once per
+    * `MergeSegmentsAt * compactEvery` batches, the LSM trade that bounds
+    * each part by `MergeSegmentsAt + compactEvery + 1` directories for the
+    * stream's lifetime. Its inputs are the manifest's, so a merge directory a
     * crash left behind is never read, and the GC after the swap removes it.
     */
   private def merge(m: Manifest): Unit = {
-    if (mergeAt <= 0 || m.segments.size < mergeAt) return
+    if (m.segments.size < MergeSegmentsAt) return
     val w = m.segments.max
     parts.foreach { p =>
       // per-directory reads: folds may be partitioned by _block_bucket, and
@@ -227,17 +231,26 @@ class AppendStore(spark: SparkSession, root: String, parts: Seq[String] = Seq(""
   def readBefore(batchId: Long): Option[Seq[DataFrame]] = {
     val m = manifest
     // each compacted directory as (prefix, after, upTo): it holds the
-    // batches in (after, upTo]; every fold is above the merge
-    val dirs = m.merged.toSeq.map(w => (MergedPrefix, -1L, w)) ++
+    // batches in (after, upTo]; every fold is above the merge, so the ones
+    // read are a prefix of this list and only its last can straddle batchId
+    val dirs = (m.merged.toSeq.map(w => (MergedPrefix, -1L, w)) ++
       (m.merged.getOrElse(-1L) +: m.segments).zip(m.segments)
-        .map { case (after, w) => (SegPrefix, after, w) }
+        .map { case (after, w) => (SegPrefix, after, w) })
+      .filter { case (_, after, _) => after + 1 < batchId }
     val live = m.live.filter(n => n > m.watermark && n < batchId)
     val frames = parts.map { p =>
-      dirs.collect { case (prefix, after, upTo) if after + 1 < batchId =>
-        val df = spark.read.parquet(compacted(p, prefix, upTo))
-        if (upTo < batchId) df else df.filter(col(BatchCol) < batchId)
-      } ++ (if (live.isEmpty) Nil
-            else Seq(spark.read.option("basePath", partDir(p)).parquet(live.map(batchDir(p, _)): _*)))
+      (if (dirs.isEmpty) Nil
+       else {
+         // one read of all of them: recursive lookup infers no partition
+         // column, so directories that each hold a `_block_bucket=` layout
+         // need no common base (a basePath of `_compact` would infer a `v`
+         // or `m` column that can clash with a data column); `_batch_id` is
+         // a data column there, and `_block_bucket` is dropped anyway
+         val df = spark.read.option("recursiveFileLookup", "true")
+           .parquet(dirs.map { case (prefix, _, upTo) => compacted(p, prefix, upTo) }: _*)
+         Seq(if (dirs.last._3 < batchId) df else df.filter(col(BatchCol) < batchId))
+       }) ++ (if (live.isEmpty) Nil
+              else Seq(spark.read.option("basePath", partDir(p)).parquet(live.map(batchDir(p, _)): _*)))
     }
     if (frames.head.isEmpty) None
     else Some(frames.map(_.map(_.drop(BatchCol, BucketCol)).reduce(_.unionByName(_))))
@@ -297,7 +310,7 @@ object AppendStore {
   val CompactEvery: Int = 64
 
   /** Merge threshold: once this many folds are committed they merge into
-    * one cumulative directory. 0 disables.
+    * one cumulative directory.
     */
   val MergeSegmentsAt: Int = 8
 

@@ -200,14 +200,9 @@ class PlugRunner(
 
   /** Fold threshold for append tables (see [[AppendStore.CompactEvery]]);
     * a table's directory count stays under `CompactEvery +
-    * MergeSegmentsAt + 1`. 0 disables.
+    * AppendStore.MergeSegmentsAt + 1`. 0 disables.
     */
   val CompactEvery: Int = AppendStore.CompactEvery
-
-  /** Merge threshold for append tables' folds (see
-    * [[AppendStore.MergeSegmentsAt]]). 0 disables.
-    */
-  val MergeSegmentsAt: Int = AppendStore.MergeSegmentsAt
 
   /** Each append table's store, made on first use; it keeps the table's
     * manifest in memory, so a batch or a read of [[table]] opens no file.
@@ -217,8 +212,7 @@ class PlugRunner(
 
   private def appendStore(spark: SparkSession, name: String): AppendStore =
     appendStores.computeIfAbsent(name,
-      _ => new AppendStore(spark, tableDir(name), compactEvery = CompactEvery,
-        mergeAt = MergeSegmentsAt))
+      _ => new AppendStore(spark, tableDir(name), compactEvery = CompactEvery))
 
   /** Fold append batches `<= upToBatch` into one compact segment (see
     * [[AppendStore.compact]]). Only call with `upToBatch` strictly below

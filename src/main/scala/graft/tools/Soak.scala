@@ -2,6 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.streaming.AppendStore
 
 /** Long-horizon streaming soak (r13 task 6): drives the durable streaming
   * components together for 1000+ micro-batches and CHECKS the lifetime
@@ -156,7 +157,7 @@ object Soak {
       if (live >= 8) fail(s"batch $i: ${live} live plug dirs >= CompactEvery")
       val compact = Option(new java.io.File(plugDir, "_compact").list()).toSeq.flatten
       val segs = compact.count(_.startsWith("v="))
-      if (segs >= runner.MergeSegmentsAt + 1)
+      if (segs >= AppendStore.MergeSegmentsAt + 1)
         fail(s"batch $i: $segs segment dirs — merge tier not firing")
       if (compact.count(_.startsWith("m=")) > 1)
         fail(s"batch $i: multiple cumulative merged dirs: $compact")
@@ -200,7 +201,6 @@ object Soak {
           (2 * i + 1, s"one two three four five six seven $tag extra"))
         .toDF("doc_id", "text")
     }
-    import graft.streaming.AppendStore
     val bound = AppendStore.MergeSegmentsAt + compactEvery + 1
     def entries(dir: String) = Option(new java.io.File(dir).list()).toSeq.flatten
     t0 = System.nanoTime()

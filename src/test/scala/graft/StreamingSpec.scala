@@ -24,6 +24,30 @@ class StreamingSpec extends SparkSpec {
     (ls(part).filter(_.startsWith("_batch_id=")) ++ ls(s"$part/_compact")).sorted
   }
 
+  /** A two-part store's crash window before a merge: `MergeSegmentsAt`
+    * folds of one batch each committed and no merge run. The store folds
+    * all but the last batch; the last fold is written by hand in both parts
+    * and the manifest is deleted, so the listing-derived manifest holds
+    * every fold. Returns the last fold's watermark.
+    */
+  private def foldsWithoutMerge(base: String, parts: Seq[String],
+                                frames: Long => Seq[org.apache.spark.sql.DataFrame]): Long = {
+    val last = AppendStore.MergeSegmentsAt - 1L
+    val store = new AppendStore(spark, base, parts, compactEvery = 0)
+    (0L until last).foreach { i => store.append(i, frames(i)); store.compact(i) }
+    store.append(last, frames(last))
+    parts.foreach { p =>
+      spark.read.option("basePath", s"$base/$p").parquet(s"$base/$p/_batch_id=$last")
+        .withColumn("_batch_id", col("_batch_id").cast("long"))
+        .write.parquet(s"$base/$p/_compact/v=$last")
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(s"$base/$p/_batch_id=$last"))
+    }
+    assert(new java.io.File(s"$base/_append_manifest").delete())
+    assert(new AppendStore(spark, base, parts).manifest ===
+      AppendStore.Manifest(0L to last, Nil), "expected every fold committed and no merge")
+    last
+  }
+
   private def writeBatch(dir: String, part: Int, rows: Seq[org.apache.spark.sql.Row]): Unit =
     opLog(spark, rows).write.mode("append").parquet(s"$dir/b$part")
 
@@ -268,7 +292,7 @@ class StreamingSpec extends SparkSpec {
     // and the SEGMENT tier itself stays bounded: at MergeSegmentsAt
     // segments they roll into one cumulative m= dir, so 120 batches
     // cannot accumulate 120/7 segment dirs
-    assert(segs < runner.MergeSegmentsAt, s"segs=$segs — merge tier never fired")
+    assert(segs < AppendStore.MergeSegmentsAt, s"segs=$segs — merge tier never fired")
     assert(compactDirs.count(_.startsWith("m=")) === 1,
       s"expected ONE cumulative merged dir: $compactDirs")
     assert(entries().count(_ == "_append_manifest") === 1)
@@ -1194,6 +1218,35 @@ class StreamingSpec extends SparkSpec {
     docs.unpersist()
   }
 
+  test("near-dup corpus store: a batch of docs all shorter than w commits with an empty buckets half") {
+    import spark.implicits._
+    val base = tmp()
+    val (corpus, results) = (s"$base/corpus", s"$base/results")
+    val parts = Seq("arrays", "buckets")
+    val sink = graft.streaming.StreamingDedup
+      .nearDupBatchSink(corpus, results, "text", "doc_id", 3, 64, 16, 0.5, compactEvery = 3)
+    // batch 0: every doc has fewer than w = 3 tokens, so it has arrays
+    // rows but no shingle and no bucket row
+    val short = Seq((0L, "tiny"), (1L, "two words")).toDF("doc_id", "text")
+    def batch(i: Long) = Seq((10 * i, s"alpha beta gamma delta epsilon zeta eta $i"),
+      (10 * i + 1, "one two three four five six seven eight")).toDF("doc_id", "text")
+    sink(short, 0L)
+    parts.foreach(p => assert(new java.io.File(s"$corpus/$p/_batch_id=0").isDirectory, p))
+    assert(new AppendStore(spark, corpus, parts).manifest === AppendStore.Manifest(Nil, Seq(0L)))
+    // batches 1 and 2 read it as corpus; batch 2 folds batches 0 and 1
+    sink(batch(1), 1L)
+    sink(batch(2), 2L)
+    parts.foreach(p => assert(storeDirs(s"$corpus/$p") === Seq("_batch_id=2", "v=1"), p))
+    assert(new AppendStore(spark, corpus, parts).manifest === AppendStore.Manifest(Seq(1L), Seq(2L)))
+    def pairSet(df: org.apache.spark.sql.DataFrame) =
+      df.select("doc_a", "doc_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val oneShot = pairSet(graft.operators.Dedup.minhashLshPairs(
+      Seq(short, batch(1), batch(2)).reduce(_.unionByName(_)), "text", "doc_id", 3, 64, 16, 0.5))
+    assert(oneShot.contains((11L, 21L)))
+    assert(pairSet(spark.read.parquet(results)) === oneShot)
+    graft.core.CacheScope.release()
+  }
+
   test("streaming semantic dedup: batches fold to the one-shot result; replay idempotent") {
     import org.apache.spark.sql.functions._
     val emb = graft.core.Tables.embeddings(spark, "/root/testdata/sf0.001")
@@ -1276,13 +1329,11 @@ class StreamingSpec extends SparkSpec {
     }
     val merged2 = spark.read.parquet(s"$base/arrays/_compact/m=${2 * mergeAt - 1}")
     assert(merged2.count() === 2L * mergeAt, "second merge lost prior merged rows")
-    // crash between merge halves: mergeAt folds committed with the merge
-    // off, then the arrays half of the merge written; the buckets half,
-    // the manifest swap and GC never ran
+    // crash between merge halves: mergeAt folds committed, then the arrays
+    // half of the merge written; the buckets half, the manifest swap and
+    // GC never ran
     val base2 = java.nio.file.Files.createTempDirectory("segmerge2").toString
-    val noMerge = new AppendStore(spark, base2, parts, compactEvery = 0, mergeAt = 0)
-    (0L until mergeAt).foreach { i => noMerge.append(i, frames(i)); noMerge.compact(i) }
-    val last = mergeAt - 1L
+    val last = foldsWithoutMerge(base2, parts, frames)
     spark.read.parquet((0L to last).map(w => s"$base2/arrays/_compact/v=$w"): _*)
       .write.parquet(s"$base2/arrays/_compact/m=$last")
     // reads are unchanged across the crash: the manifest lists the folds
@@ -1314,10 +1365,8 @@ class StreamingSpec extends SparkSpec {
     val parts = Seq("arrays", "buckets")
     def frames(id: Long) = parts.map(_ => Seq((id * 10, id * 100)).toDF("doc", "v"))
     val base = java.nio.file.Files.createTempDirectory("segmergeadv").toString
-    // mergeAt folds with the merge off
-    val noMerge = new AppendStore(spark, base, parts, compactEvery = 0, mergeAt = 0)
-    val m1 = mergeAt - 1L
-    (0L to m1).foreach { i => noMerge.append(i, frames(i)); noMerge.compact(i) }
+    // mergeAt folds committed, no merge run yet
+    val m1 = foldsWithoutMerge(base, parts, frames)
     // crash: arrays half of the merge at M=m1 written, nothing else
     spark.read.parquet((0L to m1).map(w => s"$base/arrays/_compact/v=$w"): _*)
       .write.parquet(s"$base/arrays/_compact/m=$m1")
