@@ -212,17 +212,25 @@ class HttpApi(
       .select("block_num", "created", "trx_id", "url", "reason", "medium")
   }, _.getAs[String]("url"), pointIndexMaxRows)
 
-  private lazy val summaryIdx = new PointIndex("polls_summary", () => {
-    import org.apache.spark.sql.functions._
-    // same source dispatch as the route: the incrementally-materialized
-    // summary when the stream registered one, else the batch join
-    val full = tables.get("polls_summary") match {
+  /** The polls summary every summary read takes (the route, its index and
+    * the poll route's votes): the incrementally-materialized summary when
+    * the stream registered one ("polls_summary", see PollsSummaryTable),
+    * else the batch join. One source, so index-on and over-cap bytes cannot
+    * diverge on a lagging snapshot.
+    */
+  private def summarySource: DataFrame = {
+    import org.apache.spark.sql.functions.col
+    tables.get("polls_summary") match {
       case Some(live) => live.select(
         col("author"), col("permlink"), col("parsed_answer"), col("votes"))
       case None => PollsQueries.pollSummary(
         tables("polls_content"), tables("polls_votes"))
     }
-    full.orderBy(col("author"), col("permlink"), col("parsed_answer"))
+  }
+
+  private lazy val summaryIdx = new PointIndex("polls_summary", () => {
+    import org.apache.spark.sql.functions.col
+    summarySource.orderBy(col("author"), col("permlink"), col("parsed_answer"))
   }, r => PointIndex.key(r.getAs[String]("author"), r.getAs[String]("permlink")),
     pointIndexMaxRows)
 
@@ -736,18 +744,7 @@ class HttpApi(
                   summaryIdx.lookup(pk) match {
                     case Some(rows) => rowsJson(rows, vCols)
                     case None =>
-                      // SAME source dispatch as the standalone summary
-                      // route (and as summaryIdx's build): live-
-                      // materialized table when registered, else the
-                      // batch join — the index and its fallback must
-                      // read the same source or index-on vs over-cap
-                      // bytes could diverge on a lagging snapshot
-                      val src = tables.get("polls_summary") match {
-                        case Some(live) => live
-                        case None => PollsQueries.pollSummary(
-                          tables("polls_content"), tables("polls_votes"))
-                      }
-                      rowsJson(src
+                      rowsJson(summarySource
                         .filter(col("author") === author && col("permlink") === permlink)
                         .select(vCols.map(col): _*).orderBy(col("parsed_answer"))
                         .limit(MaxResponseRows).collect().toIndexedSeq, vCols)
@@ -818,14 +815,10 @@ class HttpApi(
           permlink <- ApiShaping.validatePermlink(p)
         } yield {
           import org.apache.spark.sql.functions.col
-          // Point index first (all keys precomputed per epoch, same
-          // source dispatch). Spark fallback: serve from the
-          // incrementally-materialized summary when the streaming
-          // pipeline registered one ("polls_summary", see
-          // PollsSummaryTable): the stream already paid the
-          // content-votes join per batch, so the read path is a plain
-          // filtered scan of the latest version. Else: the batch
-          // builder (recomputes the join per data epoch, like the
+          // Point index first (all keys precomputed per epoch), then a
+          // filtered read of [[summarySource]]: a plain scan of the
+          // latest version when the stream materialized the summary,
+          // else the batch join (recomputed per data epoch, like the
           // reference recomputes per request). All paths order by
           // parsed_answer — identical bytes (HttpApiSpec pins route
           // equivalence).
@@ -833,17 +826,9 @@ class HttpApi(
             case Some(rows) =>
               rowsJson(rows, Seq("author", "permlink", "parsed_answer", "votes"))
             case None => rowsJson(prepared(planKey("summary", author, permlink))(
-              tables.get("polls_summary") match {
-                case Some(live) => live
-                  .filter(col("author") === author && col("permlink") === permlink)
-                  .select(col("author"), col("permlink"),
-                    col("parsed_answer"), col("votes"))
-                  .orderBy(col("parsed_answer"))
-                case None => PollsQueries.pollSummary(
-                    tables("polls_content"), tables("polls_votes"))
-                  .filter(col("author") === author && col("permlink") === permlink)
-                  .orderBy(col("parsed_answer"))
-              }))
+              summarySource
+                .filter(col("author") === author && col("permlink") === permlink)
+                .orderBy(col("parsed_answer"))))
           }
         }
       }

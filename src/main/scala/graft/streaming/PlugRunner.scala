@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.plugs.Plug
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
@@ -166,15 +166,10 @@ class PlugRunner(
       // state versions and check-ins, and colliding with them would make
       // readBefore(base) miss the prior state (post-prune) and silently
       // rebuild merge tables from scratch.
-      val maxCheckIn = scala.util.Try(PlugState.maxBatchId(spark, outDir, plug.name))
-        .toOption.flatten
-      val maxMerge = mergeFns.keys
-        .flatMap(n => new ParquetStateStore(spark, tableDir(n)).latestVersion)
-        .reduceOption(_ max _)
-      val base = (maxCheckIn.toSeq ++ maxMerge.toSeq)
+      val base = (PlugState.maxBatchId(spark, outDir, plug.name) ++
+        mergeFns.keys.flatMap(n => new ParquetStateStore(spark, tableDir(n)).latestVersion))
         .map(_ + 1).maxOption.getOrElse(0L)
-      val cursor = scala.util.Try(PlugState.latest(spark, outDir, plug.name))
-        .toOption.flatten
+      val cursor = PlugState.latest(spark, outDir, plug.name)
       val origin = (base, cursor.map(_._2).getOrElse(-1L))
       // write-then-rename so a crash can't leave a half-written pin
       val tmp = new org.apache.hadoop.fs.Path(checkpoint, "graft_stream_origin.tmp")
@@ -261,15 +256,15 @@ class PlugRunner(
     * Append tables roll back to any depth, a fork inside a folded or
     * merged segment included ([[AppendStore.truncateFrom]]). Merge tables
     * must still retain a state version below the fork
-    * ([[StateKeepLast]]), and the check-in history a check-in below it:
-    * those bounds are validated before ANYTHING is mutated, so a too-deep fork fails
-    * with all sinks and the cursor untouched — never a half-truncated
-    * mix. The mutation order is cursor FIRST, sinks after: once the
-    * check-ins report the pre-fork cursor, any restart replays from the
-    * fork point (overwriting leftover post-fork batch dirs idempotently),
-    * whereas the reverse order would open a crash window where the cursor
-    * is post-fork while sinks are pre-fork and a restart silently skips
-    * the truncated range. The method is idempotent — after a crash
+    * ([[StateKeepLast]]), and the check-in store a check-in below it
+    * ([[PlugState.KeepLast]]): those bounds are validated before ANYTHING
+    * is mutated, so a too-deep fork fails with all sinks and the cursor
+    * untouched — never a half-truncated mix. The mutation order is cursor
+    * FIRST, sinks after: once the check-ins report the pre-fork cursor, any
+    * restart replays from the fork point (overwriting leftover post-fork
+    * batch dirs idempotently), whereas the reverse order would open a crash
+    * window where the cursor is post-fork while sinks are pre-fork and a
+    * restart silently skips the truncated range. The method is idempotent — after a crash
     * mid-truncation, re-run it to completion before restarting the stream
     * (required for merge tables, whose fold reads the latest retained
     * version).
@@ -279,11 +274,11 @@ class PlugRunner(
     // phase 1 — validate every retention bound up front; no mutation
     // happens unless every table (and the cursor history) can roll back
     val (merged, appended) = tableNames.partition(mergeFns.contains)
-    val states = merged.map(name => new ParquetStateStore(spark, tableDir(name)))
+    // the check-in store leads: cursor first (see scaladoc), then the sinks
+    val states = PlugState.store(spark, outDir, plug.name) +:
+      merged.map(name => new ParquetStateStore(spark, tableDir(name)))
     states.foreach(_.validateTruncateFrom(fromBatch))
-    PlugState.validateTruncateFrom(spark, outDir, plug.name, fromBatch)
-    // phase 2 — cursor first (see scaladoc), then the sinks
-    PlugState.truncateFrom(spark, outDir, plug.name, fromBatch)
+    // phase 2 — mutate in that order
     states.foreach(_.truncateFrom(fromBatch))
     appended.foreach(appendStore(spark, _).truncateFrom(fromBatch))
   }
@@ -300,7 +295,8 @@ class PlugRunner(
     * that version's directory, which `prune` retires as the stream
     * advances, so re-register (re-run this method) to refresh; tables
     * with no committed version yet are skipped rather than bound to an
-    * empty schemaless frame.
+    * empty schemaless frame. A compacted append table is registered the
+    * same way, in place of its external table.
     */
   def registerCatalog(spark: SparkSession, tableNames: Seq[String]): Unit = {
     spark.sql(s"CREATE DATABASE IF NOT EXISTS ${plug.name}")
@@ -308,14 +304,17 @@ class PlugRunner(
       if (mergeFns.contains(name))
         new ParquetStateStore(spark, tableDir(name)).read()
           .foreach(_.createOrReplaceTempView(s"${plug.name}_$name"))
-      else if (appendStore(spark, name).manifest.watermark >= 0)
+      else if (appendStore(spark, name).manifest.watermark >= 0) {
         // compacted (a fold or merge watermark is committed): data lives in
         // `_compact` segment/merged dirs the external-table path can't see
         // (hidden dir), and the raw-location fallback would silently serve
         // only the few live batch dirs — register the watermark-aware
-        // union as a view, same refresh contract as the merge tables
+        // union as a view, same refresh contract as the merge tables, and
+        // drop the external table an earlier boot registered: it lists
+        // batch files the fold has since deleted
         table(spark, name).createOrReplaceTempView(s"${plug.name}_$name")
-      else {
+        spark.sql(s"DROP TABLE IF EXISTS ${plug.name}.$name")
+      } else {
         // nothing written yet -> schema inference would fail; register on
         // a later boot once the first batch has landed (same not-yet-
         // committed guard the merge tables get above)
@@ -335,170 +334,81 @@ class PlugRunner(
 }
 
 /** Engine metadata (reference `hpp.plug_state`, database/sql/tables.sql:8-15):
-  * one row per processed batch — cursor (latest block), block time, wall
-  * check-in. Mostly subsumed by Structured Streaming checkpoints; kept as a
-  * queryable table because the status API (E3) reads it.
+  * the plug's cursor (latest block and its block time) and wall check-in.
+  * The reference keeps one row per plug, updated in place; here batch N
+  * commits a one-row version N of a [[ParquetStateStore]] at
+  * `<outDir>/<plug>/_plug_state`, so check-ins commit, prune and roll back
+  * through the merge tables' protocol. Mostly subsumed by Structured
+  * Streaming checkpoints; kept as a queryable table because the status API
+  * (E3) reads it.
   */
 object PlugState {
 
-  /** Check-in directories retained verbatim; older ones fold into the
-    * roll-up (see [[prune]]). Folding triggers at 2x this count so the
-    * listing+fold cost amortizes to O(1) per batch instead of running
-    * every check-in.
+  /** Check-in versions [[checkIn]] keeps. A fork can roll back every
+    * kept batch but the oldest, whose version holds the cursor to roll back
+    * to.
     */
-  val KeepLast: Int = 8
+  val KeepLast: Int = 16
 
-  /** Record batch `batchId`'s cursor. The cursor is collected and the row
-    * built from it in the JVM: the batch id and the check-in time as plan
-    * literals would be written into the generated code (the check-in time
-    * is `current_timestamp()`, folded to a literal), so every batch would
+  private val schema = new StructType()
+    .add("latest_block_num", IntegerType)
+    .add("latest_block_time", TimestampType)
+    .add("plug", StringType, nullable = false)
+    .add("batch_id", LongType, nullable = false)
+    .add("check_in", TimestampType, nullable = false)
+
+  private[streaming] def store(spark: SparkSession, outDir: String,
+                               plugName: String): ParquetStateStore =
+    new ParquetStateStore(spark, s"$outDir/$plugName/_plug_state")
+
+  /** Commit version `batchId`: batch `batchId`'s check-in time and, in
+    * `batch_id` and the cursor columns, the newest batch at or before it
+    * that had a cursor. A batch with rows writes its own cursor; an empty
+    * batch (null cursor) copies the version below it, so a replay rewrites
+    * the same row. The cursor is collected and the row built from it in the
+    * JVM: the batch id and the check-in time as plan literals would be
+    * written into the generated code (the check-in time is
+    * `current_timestamp()`, folded to a literal), so every batch would
     * compile new classes.
     */
   def checkIn(spark: SparkSession, outDir: String, plugName: String,
               batchId: Long, batch: DataFrame): Unit = {
+    val states = store(spark, outDir, plugName)
     val cursor = batch.agg(
       max(col("block_num")).as("latest_block_num"),
-      max(col("timestamp")).as("latest_block_time"))
-    val row = org.apache.spark.sql.Row.fromSeq(cursor.head().toSeq ++
-      Seq(plugName, batchId, java.sql.Timestamp.from(java.time.Instant.now())))
-    val schema = cursor.schema.add("plug", StringType, nullable = false)
-      .add("batch_id", LongType, nullable = false)
-      .add("check_in", TimestampType, nullable = false)
-    spark.createDataFrame(java.util.List.of(row), schema)
-      .write.mode("overwrite").parquet(s"$outDir/$plugName/_plug_state/v=$batchId")
-    prune(spark, outDir, plugName)
+      max(col("timestamp")).as("latest_block_time")).head()
+    val now = java.sql.Timestamp.from(java.time.Instant.now())
+    val prior =
+      if (!cursor.isNullAt(0)) None
+      else states.readBefore(batchId, Some(schema)).map(_.head())
+    val row = prior.fold(Row.fromSeq(cursor.toSeq ++ Seq(plugName, batchId, now)))(
+      p => Row.fromSeq(p.toSeq.init :+ now))
+    states.commit(batchId, spark.createDataFrame(java.util.List.of(row), schema))
+    states.prune(KeepLast)
   }
-
-  private def stateRoot(outDir: String, plugName: String) =
-    new org.apache.hadoop.fs.Path(s"$outDir/$plugName/_plug_state")
-
-  private def versionIds(fs: org.apache.hadoop.fs.FileSystem,
-                         root: org.apache.hadoop.fs.Path): Seq[Long] =
-    if (!fs.exists(root)) Seq.empty
-    else fs.listStatus(root).toSeq
-      .filter(_.isDirectory).map(_.getPath.getName)
-      .filter(_.startsWith("v="))
-      .map(_.stripPrefix("v=").toLong).sorted
-
-  /** Bound the check-in directory count: without this, one `v=N` dir per
-    * batch accumulates forever (a year of minutely batches is ~500k
-    * directories, and [[read]]'s glob lists all of them on every status /
-    * origin probe). Everything older than the newest [[KeepLast]] dirs
-    * folds into a 1-2 row roll-up written AS the newest folded version
-    * (`v=maxFolded`), so readers need no new code path. The roll-up
-    * preserves exactly what the two consumers derive from history:
-    *
-    *  - the newest non-null-cursor row verbatim (for [[latest]] — the
-    *    status endpoint and stream-origin block cursor), and
-    *  - a null-cursor watermark row carrying the max folded batch id
-    *    (for [[maxBatchId]] — batch-id allocation), when that id's own
-    *    check-in had no cursor.
-    *
-    * The reference's `hpp.plug_state` is a single row per plug updated in
-    * place (database/sql/tables.sql:8-15), so folding history is faithful;
-    * the retained window is purely operational telemetry. Crash-safe:
-    * the summary lands in a hidden tmp dir (invisible to the `v=*` glob)
-    * and replaces `v=maxFolded` by rename; a crash before the source-dir
-    * deletes leaves rows the roll-up already subsumes (duplicates change
-    * neither argmax nor max), and the next check-in re-folds them.
-    */
-  def prune(spark: SparkSession, outDir: String, plugName: String,
-            keepLast: Int = KeepLast): Unit = {
-    val root = stateRoot(outDir, plugName)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val vs = versionIds(fs, root)
-    if (vs.size <= 2 * keepLast) return
-    val foldIds = vs.dropRight(keepLast)
-    val folded = spark.read.parquet(foldIds.map(v => s"$root/v=$v"): _*)
-    val schema = folded.schema
-    val all = folded.collect().toSeq // 1 row/dir + <=2 in a prior roll-up
-    val idOf = schema.fieldIndex("batch_id")
-    val blockOf = schema.fieldIndex("latest_block_num")
-    val maxId = foldIds.max
-    val cursorRow = all.filter(!_.isNullAt(blockOf))
-      .sortBy(_.getLong(idOf)).lastOption
-    val watermark =
-      if (cursorRow.exists(_.getLong(idOf) == maxId)) None
-      else all.find(_.getLong(idOf) == maxId).map { r =>
-        org.apache.spark.sql.Row.fromSeq(
-          r.toSeq.zipWithIndex.map { case (v, i) =>
-            if (i == blockOf || i == schema.fieldIndex("latest_block_time")) null else v
-          })
-      }
-    val summary = spark.createDataFrame(
-      spark.sparkContext.parallelize((cursorRow.toSeq ++ watermark.toSeq).toList, 1), schema)
-    val tmp = new org.apache.hadoop.fs.Path(root, ".rollup_tmp")
-    summary.write.mode("overwrite").parquet(tmp.toString)
-    val target = new org.apache.hadoop.fs.Path(root, s"v=$maxId")
-    fs.delete(target, true)
-    fs.rename(tmp, target)
-    foldIds.filter(_ != maxId)
-      .foreach(v => fs.delete(new org.apache.hadoop.fs.Path(root, s"v=$v"), true))
-  }
-
-  def read(spark: SparkSession, outDir: String, plugName: String): DataFrame =
-    spark.read.parquet(s"$outDir/$plugName/_plug_state/v=*")
 
   /** Highest committed batch id regardless of cursor content — empty
-    * batches check in with a null cursor but still own their batch id
-    * (and state version); anything allocating NEW batch ids must clear
-    * this, not [[latest]].
+    * batches check in too and own their batch id (and state version);
+    * anything allocating NEW batch ids must clear this, not [[latest]].
+    * A directory listing; no Spark job.
     */
-  def maxBatchId(spark: SparkSession, outDir: String, plugName: String): Option[Long] = {
-    val r = read(spark, outDir, plugName).agg(max(col("batch_id"))).collect().head
-    if (r.isNullAt(0)) None else Some(r.getLong(0))
-  }
+  def maxBatchId(spark: SparkSession, outDir: String, plugName: String): Option[Long] =
+    store(spark, outDir, plugName).latestVersion
 
-  /** Latest cursor per plug — the status-endpoint scan (S3). Check-ins of
-    * empty batches carry a null cursor and are skipped (the cursor is the
-    * newest batch that actually advanced the block high-water mark).
+  /** Latest cursor per plug — the status-endpoint scan (S3): the newest
+    * version's batch id and block, None while no batch has had a cursor.
     */
-  def latest(spark: SparkSession, outDir: String, plugName: String): Option[(Long, Long)] = {
-    val rows = read(spark, outDir, plugName)
-      .filter(col("latest_block_num").isNotNull)
-      .orderBy(col("batch_id").desc).limit(1).collect()
-    rows.headOption.map { r =>
-      (r.getAs[Long]("batch_id"), r.getAs[Int]("latest_block_num").toLong)
-    }
-  }
-
-  /** Fork rollback of the check-in history: drop every `v >= fromBatch`
-    * so [[latest]]/[[maxBatchId]] answer as of the pre-fork cursor (the
-    * stream-origin pin then resumes the feed from the fork point). Same
-    * retained-window rule as [[ParquetStateStore.truncateFrom]]: the
-    * roll-up ([[prune]]) may have folded history, so a rollback reaching
-    * past every surviving check-in fails loudly instead of erasing the
-    * cursor entirely.
-    */
-  def truncateFrom(spark: SparkSession, outDir: String, plugName: String,
-                   fromBatch: Long): Unit = {
-    validateTruncateFrom(spark, outDir, plugName, fromBatch)
-    val root = stateRoot(outDir, plugName)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    versionIds(fs, root).filter(_ >= fromBatch).foreach(v =>
-      fs.delete(new org.apache.hadoop.fs.Path(root, s"v=$v"), true))
-  }
-
-  /** The retained-check-in bound of [[truncateFrom]] alone, mutation-free
-    * (same validate-all-before-mutating contract as
-    * [[ParquetStateStore.validateTruncateFrom]]).
-    */
-  def validateTruncateFrom(spark: SparkSession, outDir: String,
-                           plugName: String, fromBatch: Long): Unit = {
-    val root = stateRoot(outDir, plugName)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val vs = versionIds(fs, root)
-    if (vs.exists(_ >= fromBatch))
-      require(vs.exists(_ < fromBatch),
-        s"plug-state rollback to batch $fromBatch reaches past every " +
-          s"retained check-in (${vs.mkString(",")}) — rebuild from scratch")
-  }
+  def latest(spark: SparkSession, outDir: String, plugName: String): Option[(Long, Long)] =
+    store(spark, outDir, plugName).read(Some(schema)).map(_.head())
+      .filterNot(_.isNullAt(0))
+      .map(r => (r.getLong(3), r.getInt(0).toLong))
 }
 
 /** Versioned parquet state table: `v=<batchId>` directories, latest wins.
   * Replaces the reference's transactional UPDATE/INSERT state maintenance
   * (T3/T9) without requiring a transactional table format: committing
   * version N twice (failure replay) simply rewrites the same directory.
+  * Holds the plug merge tables and the plug check-ins ([[PlugState]]).
   */
 class ParquetStateStore(spark: SparkSession, dir: String) {
   import org.apache.hadoop.fs.Path
@@ -534,8 +444,8 @@ class ParquetStateStore(spark: SparkSession, dir: String) {
       schema.fold(spark.read)(s => spark.read.schema(s)).parquet(s"$dir/v=$v")
     }
 
-  def read(): Option[DataFrame] =
-    latestVersion.map(v => spark.read.parquet(s"$dir/v=$v"))
+  def read(schema: Option[StructType] = None): Option[DataFrame] =
+    latestVersion.map(v => schema.fold(spark.read)(s => spark.read.schema(s)).parquet(s"$dir/v=$v"))
 
   def commit(batchId: Long, df: DataFrame): Unit =
     df.write.mode("overwrite").parquet(s"$dir/v=$batchId")
@@ -571,7 +481,6 @@ class ParquetStateStore(spark: SparkSession, dir: String) {
     if (vs.exists(_ >= fromBatch))
       require(vs.exists(_ < fromBatch),
         s"state rollback to batch $fromBatch reaches past every retained " +
-          s"version (${vs.mkString(",")}) — deepen StateKeepLast or rebuild " +
-          "this table from scratch")
+          s"version (${vs.mkString(",")}) of $dir — rebuild it from scratch")
   }
 }

@@ -11,8 +11,10 @@ import graft.streaming.AppendStore
   *  1. PlugRunner (podping) — append store + two-tier compaction: live
   *     batch dirs < CompactEvery, incremental segments < MergeSegmentsAt,
   *     exactly one cumulative merged dir and one manifest, table count
-  *     exact, checked EVERY batch (a transient unbounded window would
-  *     hide from an end-only check).
+  *     exact, check-in versions within PlugState's retained window,
+  *     checked EVERY batch (a transient unbounded window would hide from
+  *     an end-only check); the last check-in's cursor is the tail's last
+  *     block.
   *  2. OpLogTail — versioned-cursor GC: <= 2 cursor markers and no
   *     orphaned .tmp after every commit, cursor monotone, 1000 commits.
   *  3. StreamingDedup.nearDupBatchSink — corpus store bound
@@ -149,6 +151,8 @@ object Soak {
         (from to to).map(b => podpingOp(spark, b)).reduce(_.unionByName(_)),
       step = 1L, startAfterBlock = start)
     val plugDir = new java.io.File(s"$base/plug/podping/updates")
+    val checkInDir = new java.io.File(s"$base/plug/podping/_plug_state")
+    val checkInsKept = graft.streaming.PlugState.KeepLast
     val ckptDir = new java.io.File(s"$base/ckpt")
     def plugEntries(): Seq[String] =
       Option(plugDir.list()).toSeq.flatten
@@ -161,6 +165,9 @@ object Soak {
         fail(s"batch $i: $segs segment dirs — merge tier not firing")
       if (compact.count(_.startsWith("m=")) > 1)
         fail(s"batch $i: multiple cumulative merged dirs: $compact")
+      val checkIns = Option(checkInDir.list()).toSeq.flatten.count(_.startsWith("v="))
+      if (checkIns == 0 || checkIns > checkInsKept)
+        fail(s"batch $i: $checkIns check-in versions, retained window is $checkInsKept")
       val cursors = Option(ckptDir.list()).toSeq.flatten
         .filter(_.startsWith("graft_oplog_cursor"))
       if (cursors.size > 2) fail(s"batch $i: cursor markers not GC'd: $cursors")
@@ -183,7 +190,11 @@ object Soak {
     }
     val n = runner.table(spark, "updates").count()
     if (n != batches) fail(s"plug table count $n != $batches")
-    println(s"[soak] PASS plug+tail: $batches batches, table exact, dirs bounded every batch, cursor GC bounded")
+    val checkedIn = graft.streaming.PlugState.latest(spark, s"$base/plug", "podping")
+    if (checkedIn != Some((lastCursor, lastCursor)))
+      fail(s"check-in cursor $checkedIn != tail's last block $lastCursor")
+    println(s"[soak] PASS plug+tail: $batches batches, table exact, dirs and check-ins " +
+      "bounded every batch, check-in cursor at the tail's last block, cursor GC bounded")
 
     // ---- 3. near-dup streaming store (own batch ids, smaller count —
     // each batch writes 3 stores; bound checked every batch)

@@ -424,8 +424,8 @@ class StreamingSpec extends SparkSpec {
     import graft.streaming.PlugState
     val out = tmp()
     // 18 cursor-bearing batches then 7 empty ones (null cursor) — enough
-    // to trigger the fold (> 2*KeepLast dirs) with the newest real cursor
-    // already inside the folded range
+    // to prune (> KeepLast versions), with the empty check-ins carrying
+    // the newest real cursor forward
     (0 until 25).foreach { i =>
       val batch =
         if (i < 18) opLog(spark, Seq(
@@ -435,11 +435,11 @@ class StreamingSpec extends SparkSpec {
     }
     val dirs = new java.io.File(s"$out/podping/_plug_state").list().toSeq
       .count(_.startsWith("v="))
-    assert(dirs <= 2 * PlugState.KeepLast, s"dirs=$dirs grew past the fold bound")
+    assert(dirs <= 2 * PlugState.KeepLast, s"dirs=$dirs grew past the prune bound")
     // batch-id allocation sees every committed id, including empty ones
     assert(PlugState.maxBatchId(spark, out, "podping") === Some(24L))
     // the status cursor is the newest check-in that advanced the block
-    // high-water mark, preserved verbatim through the roll-up
+    // high-water mark, copied verbatim into each empty batch's version
     assert(PlugState.latest(spark, out, "podping") === Some((17L, 117L)))
   }
 
@@ -531,6 +531,82 @@ class StreamingSpec extends SparkSpec {
     assert(spark.sql("SELECT url FROM podping.updates ORDER BY url")
       .collect().map(_.getString(0)).toSeq === Seq("u1", "u2"))
     assert(spark.sql("SELECT count(*) FROM podping.ops").collect().head.getLong(0) === 1L)
+  }
+
+  test("registerCatalog after a fold: the view replaces the external table an earlier call made") {
+    val out = tmp()
+    val runner = new PlugRunner(Podping, out) { override val CompactEvery = 3 }
+    def batch(i: Int) = opLog(spark, Seq(
+      op(i.toLong, 100 + i, 0, "2024-01-01 00:00:00", "podping", podpingV03(Seq(s"u$i")))))
+    spark.sql("DROP TABLE IF EXISTS podping.updates") // another spec's registration
+    (0 to 1).foreach(i => runner.processBatch(batch(i), i.toLong))
+    runner.registerCatalog(spark, Seq("updates")) // nothing folded yet: the external table
+    assert(spark.sql("SELECT count(*) FROM podping.updates").head.getLong(0) === 2L)
+    (2 to 9).foreach(i => runner.processBatch(batch(i), i.toLong))
+    runner.registerCatalog(spark, Seq("updates"))
+    assert(spark.sql("SELECT count(*) FROM podping_updates").head.getLong(0) === 10L)
+    // the external table listed batch files the folds have deleted
+    assert(!spark.catalog.tableExists("podping.updates"))
+  }
+
+  test("check-ins: empty batches past the retained window keep the cursor; a fresh checkpoint resumes from it") {
+    import graft.streaming.PlugState
+    val src = tmp(); val out = tmp(); val ckpt = tmp()
+    val runner = new PlugRunner(Podping, out)
+    val ops = (0 until 3).map(i =>
+      op(i.toLong, 100 + i, 0, "2024-01-01 00:00:00", "podping", podpingV03(Seq(s"u$i"))))
+    ops.zipWithIndex.foreach { case (o, i) => runner.processBatch(opLog(spark, Seq(o)), i.toLong) }
+    val last = 2L + PlugState.KeepLast + 1 // more empty batches than versions are kept
+    (3L to last).foreach(runner.processBatch(opLog(spark, Seq.empty), _))
+    val kept = new java.io.File(s"$out/podping/_plug_state").list().toSeq
+      .filter(_.startsWith("v=")).sorted
+    assert(kept.size === PlugState.KeepLast && !kept.contains("v=2"), kept)
+    assert(PlugState.latest(spark, out, "podping") === Some((2L, 102L)))
+    assert(PlugState.maxBatchId(spark, out, "podping") === Some(last))
+    // a source replaying the ingested blocks plus one new block
+    writeBatch(src, 1, ops :+
+      op(3L, 103, 0, "2024-01-01 00:00:00", "podping", podpingV03(Seq("new"))))
+    runner.start(stream(src), ckpt).awaitTermination()
+    assert(runner.table(spark, "updates").select("url").as[String](
+      org.apache.spark.sql.Encoders.STRING).collect().sorted.toSeq === Seq("new", "u0", "u1", "u2"))
+    assert(PlugState.latest(spark, out, "podping") === Some((last + 1, 103L)))
+  }
+
+  test("polls fork below every retained content version fails with nothing changed; the deepest allowed fork succeeds") {
+    import graft.streaming.PlugState
+    val tables = Seq("ops", "content", "votes", "deletes")
+    def feed(r: PlugRunner, n: Int): Unit = (0 until n).foreach { i =>
+      r.processBatch(opLog(spark, Seq(
+        op(2L * i, 100 + 2 * i, 0, "2024-01-01 00:00:00", "polls",
+          pollCreate(s"p$i", s"Q$i?", Seq("a", "b"), "2024-06-01 00:00:00", "t"),
+          postingAuth = s"user$i"),
+        op(2L * i + 1, 100 + 2 * i + 1, 0, "2024-01-01 00:00:10", "polls",
+          pollVote(s"user$i", s"p$i", 1), postingAuth = "voter")) ++
+        // one delete, so every table has rows
+        (if (i == 0) Seq(op(1000L, 101, 1, "2024-01-01 00:00:20", "polls",
+          pollDelete("p0"), postingAuth = "user0")) else Nil)), i.toLong)
+    }
+    def rows(r: PlugRunner, t: String) = r.table(spark, t).collect().map(_.toString).sorted.toSeq
+    val out = tmp()
+    val runner = PollsStreaming.runner(out)
+    feed(runner, 6)
+    def contentVersions = new java.io.File(s"$out/polls/content").list().toSeq
+      .filter(_.startsWith("v=")).sorted
+    def snapshot() = (tables.map(rows(runner, _)), contentVersions,
+      PlugState.latest(spark, out, "polls"), PlugState.maxBatchId(spark, out, "polls"))
+    assert(contentVersions === Seq("v=4", "v=5"))
+    val before = snapshot()
+    val err = intercept[IllegalArgumentException](runner.truncateFromBatch(spark, tables, 4L))
+    assert(err.getMessage.contains("reaches past every retained version"), err.getMessage)
+    assert(snapshot() === before)
+    // from batch 5 rolls content back onto v=4: a build of batches 0-4
+    runner.truncateFromBatch(spark, tables, 5L)
+    assert(contentVersions === Seq("v=4"))
+    assert(PlugState.latest(spark, out, "polls") === Some((4L, 109L)))
+    assert(PlugState.maxBatchId(spark, out, "polls") === Some(4L))
+    val fresh = PollsStreaming.runner(tmp())
+    feed(fresh, 5)
+    tables.foreach(t => assert(rows(runner, t) === rows(fresh, t), t))
   }
 
   test("status endpoint composes health + plug-state cursors") {
@@ -976,7 +1052,7 @@ class StreamingSpec extends SparkSpec {
       Map("content" -> PollsStreaming.mergeContent _)) {
       override val CompactEvery = 4
     }
-    val nBatches = 20 // > 2*PlugState.KeepLast so the check-in fold fires
+    val nBatches = 20 // > PlugState.KeepLast so the check-in store prunes
     (0 until nBatches).foreach { i =>
       runner.processBatch(opLog(spark, Seq(
         op(2L * i, 100 + 2 * i, 0, "2024-01-01 00:00:00", "polls",
@@ -998,7 +1074,7 @@ class StreamingSpec extends SparkSpec {
         .count(_.startsWith("_batch_id="))
       assert(live < nBatches / 2, s"$t append partitions unbounded: $live")
     }
-    // check-in history folds into the roll-up window
+    // check-in history is pruned to its retained window
     val checkIns = Option(new java.io.File(s"$out/polls/_plug_state").list())
       .toSeq.flatten.count(_.startsWith("v="))
     assert(checkIns <= 2 * graft.streaming.PlugState.KeepLast,
