@@ -264,10 +264,10 @@ class PlugRunner(
     * restart replays from the fork point (overwriting leftover post-fork
     * batch dirs idempotently), whereas the reverse order would open a crash
     * window where the cursor is post-fork while sinks are pre-fork and a
-    * restart silently skips the truncated range. The method is idempotent — after a crash
-    * mid-truncation, re-run it to completion before restarting the stream
-    * (required for merge tables, whose fold reads the latest retained
-    * version).
+    * restart silently skips the truncated range. The method is idempotent
+    * — after a crash mid-truncation, re-run it to completion before
+    * restarting the stream (required for merge tables, whose fold reads
+    * the latest retained version).
     */
   def truncateFromBatch(spark: SparkSession, tableNames: Seq[String],
                         fromBatch: Long): Unit = {
@@ -440,12 +440,13 @@ class ParquetStateStore(spark: SparkSession, dir: String) {
     * schema-inference job.
     */
   def readBefore(batchId: Long, schema: Option[StructType] = None): Option[DataFrame] =
-    versions.filter(_ < batchId).lastOption.map { v =>
-      schema.fold(spark.read)(s => spark.read.schema(s)).parquet(s"$dir/v=$v")
-    }
+    versions.filter(_ < batchId).lastOption.map(load(_, schema))
 
   def read(schema: Option[StructType] = None): Option[DataFrame] =
-    latestVersion.map(v => schema.fold(spark.read)(s => spark.read.schema(s)).parquet(s"$dir/v=$v"))
+    latestVersion.map(load(_, schema))
+
+  private def load(v: Long, schema: Option[StructType]): DataFrame =
+    schema.fold(spark.read)(s => spark.read.schema(s)).parquet(s"$dir/v=$v")
 
   def commit(batchId: Long, df: DataFrame): Unit =
     df.write.mode("overwrite").parquet(s"$dir/v=$batchId")
